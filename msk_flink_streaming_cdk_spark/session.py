@@ -7,6 +7,11 @@ is a session factory that pins the semantics-critical settings
 timestamps, ``kfpLambdaStreamProducer.py:53``) and the
 scale-critical ones (AQE, shuffle partitions, Arrow).
 
+The global ``spark.sql.shuffle.partitions`` default serves batch
+queries, whose shuffles AQE coalesces at runtime. Stateful streaming
+queries are not coalesced, so the pipelines size their partitions
+when the query starts (``streaming.pipelines.state_partitions``).
+
 ``tune(spark)`` applies the runtime-settable subset to a session we did
 not create (the verify driver hands us one) — it is idempotent.
 """
@@ -96,7 +101,6 @@ def tune(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "msk-flink-streaming-cdk-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Create (or get) a local SparkSession with engine defaults.
 
@@ -107,7 +111,6 @@ def get_spark(
     cluster-safe (no local-only semantics).
     """
     cpus = cpus or default_parallelism()
-    shuffle = shuffle_partitions or max(32, cpus)
     builder = SparkSession.builder.appName(app_name)
     if not (
         os.environ.get("SPARK_MASTER")
@@ -118,7 +121,7 @@ def get_spark(
     ):
         builder = builder.master(f"local[{cpus}]")
     builder = (
-        builder.config("spark.sql.shuffle.partitions", str(shuffle))
+        builder.config("spark.sql.shuffle.partitions", str(max(32, cpus)))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         # Managed-table warehouse for bucketed tables (storage.py);

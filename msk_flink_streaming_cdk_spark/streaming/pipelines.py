@@ -9,14 +9,18 @@ Spark analogue: the same Q1/Q2 transforms (operators/reference.py) with
 group windows, SURVEY §2.7 W6), run as two StreamingQueries with
 independent checkpoints. Offsets across sinks are independently
 committed (documented delta from Flink's single-job atomicity — SURVEY
-§7 risk 4); for single-scan fan-out use ``run_single_scan_fanout``.
+§7 risk 4).
+
+Each query's stateful shuffle is sized to the cores that run it
+(``state_partitions``) when the query first starts; Spark freezes that
+count in the checkpoint, so a restart keeps it.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.reference import q1_high_temp_alerts, q2_windowed_avg
 
@@ -33,6 +37,15 @@ def q2_stream(readings: DataFrame, watermark: str = REFERENCE_WATERMARK, **kw) -
     return q2_windowed_avg(readings, watermark=watermark, **kw)
 
 
+def state_partitions(spark: SparkSession) -> int:
+    """State stores per stateful operator: one per core running the job
+    (``local[n]`` locally, total executor cores on a cluster). Every
+    store is loaded and committed each micro-batch, so more stores than
+    cores only adds commit work; AQE does not coalesce a stateful
+    shuffle the way it does a batch one."""
+    return spark.sparkContext.defaultParallelism
+
+
 def run_reference_pipelines(
     readings: DataFrame,
     q1_sink: SinkFn,
@@ -41,48 +54,26 @@ def run_reference_pipelines(
     q1_window: str = "30 seconds",
     q2_window: str = "60 seconds",
 ) -> list:
-    """Start both reference pipelines; returns the StreamingQueries."""
-    queries = [
-        q1_sink(q1_stream(readings, watermark, window=q1_window)),
-        q2_sink(q2_stream(readings, watermark, window=q2_window)),
-    ]
-    return queries
+    """Start both reference pipelines; returns the StreamingQueries.
 
-
-def run_single_scan_fanout(
-    readings: DataFrame,
-    q1_batch_sink: Callable[[DataFrame, int], None],
-    q2_batch_sink: Callable[[DataFrame, int], None],
-    checkpoint: str,
-    watermark: str = REFERENCE_WATERMARK,
-    trigger: dict | None = None,
-):
-    """Single-scan multi-sink parity with the reference StatementSet.
-
-    One source scan per micro-batch; the windowed aggregations run as
-    *batch* plans inside foreachBatch over the micro-batch — note this
-    changes window semantics to per-batch (no cross-batch state), so it
-    is only equivalent when micro-batches align with files/segments
-    that contain whole windows. Provided for scan-sharing parity; the
-    default two-query form keeps exact streaming semantics.
+    ``spark.sql.shuffle.partitions`` is set to ``state_partitions`` only
+    around the two ``start()`` calls: each query clones the session conf
+    when it starts, and the caller's value is restored afterwards.
     """
-    trigger = trigger or {"availableNow": True}
-
-    def fanout(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            q1_batch_sink(q1_high_temp_alerts(batch_df), batch_id)
-            q2_batch_sink(q2_windowed_avg(batch_df), batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return (
-        readings.withWatermark("event_time", watermark)
-        .writeStream.foreachBatch(fanout)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
+    conf = readings.sparkSession.conf
+    key = "spark.sql.shuffle.partitions"
+    caller = conf.get(key, None)
+    conf.set(key, str(state_partitions(readings.sparkSession)))
+    try:
+        return [
+            q1_sink(q1_stream(readings, watermark, window=q1_window)),
+            q2_sink(q2_stream(readings, watermark, window=q2_window)),
+        ]
+    finally:
+        if caller is None:
+            conf.unset(key)
+        else:
+            conf.set(key, caller)
 
 
 def with_observed_metrics(df: DataFrame, name: str = "pipeline_metrics"):

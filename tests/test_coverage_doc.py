@@ -13,7 +13,7 @@ _NON_QUERY_TOKENS = {
     "source_options", "read_kafka_json", "to_kafka_json",
     "write_kafka_json", "write_partitioned_files",
     "foreach_batch_publisher", "run_reference_pipelines",
-    "run_single_scan_fanout", "ewma_by_key", "interval_join",
+    "ewma_by_key", "interval_join",
     "asof_join_backward", "simhash64", "extract_features",
     "_bucket_udf", "sessionize", "window_start", "session_window",
     "applyInPandasWithState", "pandas_udf", "mapInPandas",

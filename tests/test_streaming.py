@@ -10,6 +10,7 @@ append-mode emission, late-row drop, and the partitioned-sink layout
 from __future__ import annotations
 
 import glob
+import json
 import os
 import time
 from datetime import datetime, timedelta
@@ -21,9 +22,9 @@ from msk_flink_streaming_cdk_spark.sources.files import stream_parquet_dir
 from msk_flink_streaming_cdk_spark.streaming.pipelines import (
     q1_stream,
     q2_stream,
-    run_single_scan_fanout,
 )
 from msk_flink_streaming_cdk_spark.streaming.sinks import (
+    foreach_batch_publisher,
     memory_sink,
     write_partitioned_files,
 )
@@ -96,6 +97,47 @@ def test_q1_window_below_having_threshold_suppressed(spark, tmp_path):
     assert out.count() == 0
 
 
+def test_foreach_batch_publisher_publishes_each_alert(spark, tmp_path):
+    # Q1 alerts through the SNS-shaped publisher: every alert row is
+    # published once, from the executors, as one record.
+    batches = [
+        [("1", 31, 0), ("1", 32, 2), ("1", 31, 4), ("1", 32, 6),
+         ("2", 33, 1), ("2", 34, 3), ("2", 35, 5), ("2", 36, 7),
+         ("2", 31, 9), ("1", 27, 40)],
+        [("2", 31, 41), ("2", 32, 42), ("2", 33, 43), ("2", 34, 44),
+         ("1", 27, 100)],
+    ]
+    src = _write_batches(spark, tmp_path, batches)
+    sent = os.path.join(str(tmp_path), "published.jsonl")
+
+    def publish(record):
+        with open(sent, "a") as f:
+            f.write(json.dumps(record, default=str, sort_keys=True) + "\n")
+
+    readings = stream_parquet_dir(
+        spark, src, SENSOR_READING, max_files_per_trigger=1
+    )
+    q = (
+        q1_stream(readings)
+        .writeStream.foreachBatch(foreach_batch_publisher(publish))
+        .option("checkpointLocation", os.path.join(str(tmp_path), "ckpt_pub"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    with open(sent) as f:
+        published = sorted(f.read().splitlines())
+    alerts = _run_to_memory(spark, src, q1_stream, "q1_publisher_test")
+    expected = sorted(
+        json.dumps(r.asDict(), default=str, sort_keys=True) for r in alerts.collect()
+    )
+    assert len(expected) == 3  # sensor 1 [0,30); sensor 2 [0,30) and [30,60)
+    assert published == expected
+
+
 def test_q2_avg_bigint_parity_and_final_emission(spark, tmp_path):
     # window [0,60): temps 27,28,32 → avg 29.0 → BIGINT 29
     # window [60,120): temps 30,31 → avg 30.5 → BIGINT 30 (floor parity
@@ -136,25 +178,6 @@ def test_partitioned_file_sink_layout_and_success_files(spark, tmp_path):
     assert os.path.exists(os.path.join(part_dir, "_SUCCESS"))
     data = spark.read.json(os.path.join(out_dir, "year=*", "month=*", "day=*", "hour=*"))
     assert data.count() >= 2  # both sensors' hour-0 windows committed
-
-
-def test_single_scan_fanout_runs_both_sinks(spark, tmp_path):
-    batches = [[("1", 31, i) for i in range(0, 25, 5)] + [("1", 27, 50)]]
-    src = _write_batches(spark, tmp_path, batches)
-    readings = stream_parquet_dir(spark, src, SENSOR_READING)
-    captured: dict[str, int] = {}
-
-    def q1_sink(df, batch_id):
-        captured["q1"] = captured.get("q1", 0) + df.count()
-
-    def q2_sink(df, batch_id):
-        captured["q2"] = captured.get("q2", 0) + df.count()
-
-    ckpt = os.path.join(str(tmp_path), "ckpt_fanout")
-    q = run_single_scan_fanout(readings, q1_sink, q2_sink, ckpt)
-    q.awaitTermination(120)
-    assert captured["q1"] >= 1  # 5 hot rows in [0,30) → count>3 alert
-    assert captured["q2"] >= 1
 
 
 def test_upsert_latest_sink_merges_and_is_idempotent(spark, tmp_path):
