@@ -769,27 +769,26 @@ def connected_components(
         # (round r+1's subtree and round r's aggregate reference the
         # same RDD), so each round still computes once. Returning the
         # post-convergence round is identical content: sum equality
-        # means no node changed, i.e. the frames are row-equal.
+        # means no node changed, i.e. the frames are row-equal. At most
+        # ``max_iter`` rounds run in all: an odd cap ends on a single-
+        # round probe.
+        def label_sum(frame: DataFrame) -> DataFrame:
+            return frame.agg(F.sum(F.col("label").cast("decimal(38,0)")))
+
         prev_sum = None
-        for _ in range(max_iter // 2 + 1):
-            l1 = one_round(labels)
-            l2 = one_round(l1)
-            s1, s2 = (
-                r[0]
-                for r in l1.agg(
-                    F.sum(F.col("label").cast("decimal(38,0)"))
-                )
-                .unionAll(
-                    l2.agg(F.sum(F.col("label").cast("decimal(38,0)")))
-                )
-                .collect()
-            )
-            if s1 is None or (prev_sum is not None and s1 == prev_sum):
-                return l1
-            if s2 == s1:
-                return l2
-            prev_sum = s2
-            labels = l2
+        for done in range(0, max_iter, 2):
+            frames = [one_round(labels)]
+            if done + 1 < max_iter:
+                frames.append(one_round(frames[0]))
+            probe = label_sum(frames[0])
+            for frame in frames[1:]:
+                probe = probe.unionAll(label_sum(frame))
+            for frame, (total,) in zip(frames, probe.collect()):
+                # An empty graph sums to null; no change sums equal.
+                if total is None or total == prev_sum:
+                    return frame
+                prev_sum = total
+            labels = frames[-1]
         return labels
     prev = labels
     for _ in range(max_iter):

@@ -1180,8 +1180,9 @@ def nndescent_knn_graph(
        candidate edges; exact unit-dot re-rank keeps each node's
        top-k. No all-pairs product — candidates exist only inside
        (table, bucket) cells. ``n_bits=None`` (default) sizes the
-       bucket granularity to the CORPUS: one bounded count() job,
-       then ``bits = log2(n / 64)`` clamped to [1, 16], targeting
+       bucket granularity to the CORPUS when this call hashes it (no
+       ``hashed_df``/``scored_df``): one bounded count() job, then
+       ``bits = log2(n / 64)`` clamped to [1, 16], targeting
        ~64 vectors per bucket — fixed bits either explode the init
        join (too few for a big corpus) or starve it (too many for a
        small one); the count-derived dial is the IVF codebook-stride
@@ -1276,9 +1277,6 @@ def nndescent_knn_graph(
             "rank", F.row_number().over(w)
         ).filter(F.col("rank") <= k)
 
-    if n_bits is None:
-        n = corpus.count()  # bounded scalar job, sizes the buckets
-        n_bits = min(16, max(1, int(np.ceil(np.log2(max(n, 2) / 64)))))
     # ``scored_df``: caller-persisted SCORED init-candidate frame
     # (src, dst, cosine) — exactly ``lsh_scored_candidates`` of this
     # corpus's hashed frame under the same family (or an id-filtered
@@ -1291,10 +1289,12 @@ def nndescent_knn_graph(
         # ``hashed_df``: caller-persisted maintained (vec_id, table_id,
         # bucket) frame for exactly ``corpus``'s rows under the SAME
         # plane family (``lsh_hashed_frame``) — skips the hashing pass.
-        hashed = (
-            hashed_df
-            if hashed_df is not None
-            else lsh_hashed_frame(
+        hashed = hashed_df
+        if hashed is None:
+            if n_bits is None:
+                n = corpus.count()  # bounded scalar job, sizes the buckets
+                n_bits = min(16, max(1, int(np.ceil(np.log2(max(n, 2) / 64)))))
+            hashed = lsh_hashed_frame(
                 vecs,
                 n_bits,
                 n_tables=n_tables,
@@ -1303,7 +1303,6 @@ def nndescent_knn_graph(
                 int_planes=int_planes,
                 span=span,
             ).transform(materialize_once)
-        )
         init_scored = lsh_scored_candidates(hashed, unit)
     g = topk(init_scored).transform(materialize_once)
     for _ in range(int(n_rounds)):

@@ -9,8 +9,9 @@ scale-critical ones (AQE, shuffle partitions, Arrow).
 
 The global ``spark.sql.shuffle.partitions`` default serves batch
 queries, whose shuffles AQE coalesces at runtime. Stateful streaming
-queries are not coalesced, so the pipelines size their partitions
-when the query starts (``streaming.pipelines.state_partitions``).
+queries are not coalesced, so the reference job sizes their partitions
+when its queries start: one state store per core, split between its two
+concurrent queries (``streaming.pipelines.state_partitions``).
 
 ``tune(spark)`` applies the runtime-settable subset to a session we did
 not create (the verify driver hands us one) — it is idempotent.

@@ -11,9 +11,10 @@ independent checkpoints. Offsets across sinks are independently
 committed (documented delta from Flink's single-job atomicity — SURVEY
 §7 risk 4).
 
-Each query's stateful shuffle is sized to the cores that run it
-(``state_partitions``) when the query first starts; Spark freezes that
-count in the checkpoint, so a restart keeps it.
+The two queries share the cores that run the job: each query's
+stateful shuffle gets half of them (``state_partitions``), one state
+store per core across the job, when the query first starts. Spark
+freezes that count in the checkpoint, so a restart keeps it.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from ..operators.reference import q1_high_temp_alerts, q2_windowed_avg
 SinkFn = Callable[[DataFrame], object]  # DataFrame -> StreamingQuery
 
 REFERENCE_WATERMARK = "5 seconds"  # main.py:18
+STATEFUL_QUERIES = 2  # Q1 and Q2 run at once and share the cores
 
 
 def q1_stream(readings: DataFrame, watermark: str = REFERENCE_WATERMARK, **kw) -> DataFrame:
@@ -38,12 +40,14 @@ def q2_stream(readings: DataFrame, watermark: str = REFERENCE_WATERMARK, **kw) -
 
 
 def state_partitions(spark: SparkSession) -> int:
-    """State stores per stateful operator: one per core running the job
-    (``local[n]`` locally, total executor cores on a cluster). Every
-    store is loaded and committed each micro-batch, so more stores than
-    cores only adds commit work; AQE does not coalesce a stateful
-    shuffle the way it does a batch one."""
-    return spark.sparkContext.defaultParallelism
+    """State stores per stateful query of the reference job: the cores
+    running the job (``local[n]`` locally, total executor cores on a
+    cluster) split between its ``STATEFUL_QUERIES`` concurrent queries,
+    so the job holds one store per core. Every store is loaded and
+    committed each micro-batch, so more stores than cores only adds
+    commit work; AQE does not coalesce a stateful shuffle the way it
+    does a batch one."""
+    return max(1, spark.sparkContext.defaultParallelism // STATEFUL_QUERIES)
 
 
 def run_reference_pipelines(

@@ -214,6 +214,28 @@ def test_connected_components_multi_hop_chain(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (9, 7)}
 
 
+def test_connected_components_runs_at_most_max_iter_rounds(spark):
+    # On the path 0-1-...-11 each propagation round moves the minimum
+    # label one hop, so after r rounds node i holds max(0, i - r): the
+    # far end's label counts the rounds run. The paired convergence
+    # probe must stop at max_iter rounds, odd caps included.
+    from msk_flink_streaming_cdk_spark.operators.dedup import (
+        connected_components,
+    )
+
+    n = 12
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"]
+    )
+    for max_iter in (1, 3, 4):
+        got = dict(
+            tuple(r)
+            for r in connected_components(pairs, max_iter=max_iter).collect()
+        )
+        assert (n - 1) - got[n - 1] == max_iter
+        assert got == {i: max(0, i - max_iter) for i in range(n)}, max_iter
+
+
 def test_connected_components_string_node_ids(spark):
     # ADVICE r5 (medium): the decimal label-sum convergence probe is
     # null for string labels under ANSI off, which made the loop

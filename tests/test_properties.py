@@ -612,16 +612,21 @@ def test_incremental_blocking_forms_identical(spark):
             for form in ("token", "probe")
         }
         assert out["token"] == out["probe"], threshold
-    # auto honors the gate: force each side via the env override
+    # auto honors the gate: force each side via the env override. The
+    # two forms return the same rows, so the selected form is read off
+    # the plan: token explodes the shingle arrays, probe explodes the
+    # adjacent length buckets into ``probe_bucket``.
+    from msk_flink_streaming_cdk_spark.plans.checks import formatted_plan
+
     for gate, expect in (("1", "token"), ("1000000000", "probe")):
         os.environ["SPARK_GRAFT_INC_TOKEN_MIN_CORPUS"] = gate
         try:
-            rows = sorted(
-                tuple(r)
-                for r in incremental_near_dup(
-                    corpus, incoming, threshold=0.6, blocking="auto"
-                ).collect()
+            auto = incremental_near_dup(
+                corpus, incoming, threshold=0.6, blocking="auto"
             )
         finally:
             del os.environ["SPARK_GRAFT_INC_TOKEN_MIN_CORPUS"]
-        assert rows == out[expect if expect == "token" else "probe"]
+        plan = formatted_plan(auto)
+        shape = ("explode(shingles" in plan, "probe_bucket" in plan)
+        assert shape == {"token": (True, False), "probe": (False, True)}[expect], gate
+        assert sorted(tuple(r) for r in auto.collect()) == out[expect]

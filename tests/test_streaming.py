@@ -180,6 +180,68 @@ def test_partitioned_file_sink_layout_and_success_files(spark, tmp_path):
     assert data.count() >= 2  # both sensors' hour-0 windows committed
 
 
+def _drain_to_partitioned_files(spark, tmp_path, src, name):
+    readings = stream_parquet_dir(
+        spark, src, SENSOR_READING, max_files_per_trigger=1
+    )
+    out_dir = os.path.join(str(tmp_path), f"{name}_sink")
+    q = write_partitioned_files(
+        q2_stream(readings), out_dir, os.path.join(str(tmp_path), f"{name}_ckpt")
+    )
+    assert q.awaitTermination(120), "partitioned sink did not drain"
+    assert q.exception() is None
+    return q, out_dir
+
+
+def _hour_dirs(out_dir, name):
+    """Relative partition dirs under ``out_dir`` holding a file ``name``."""
+    return {
+        os.path.relpath(os.path.dirname(f), out_dir)
+        for f in glob.glob(
+            os.path.join(out_dir, "year=*", "month=*", "day=*", "hour=*", name)
+        )
+    }
+
+
+def test_partitioned_file_sink_runs_one_job_per_batch(spark, tmp_path):
+    # The touched partitions come from the write's own observed metric:
+    # a second action over the batch would run the stateful plan again
+    # (a second load and commit of every state store).
+    batches = [
+        [(str(s), 25 + s, off) for s in range(4) for off in (0, 20, 40)],
+        [(str(s), 30 + s, off) for s in range(4) for off in (70, 100)],
+        [("1", 28, 200)],
+    ]
+    src = _write_batches(spark, tmp_path, batches)
+    q, out_dir = _drain_to_partitioned_files(spark, tmp_path, src, "jobs")
+    assert _hour_dirs(out_dir, "_SUCCESS"), os.listdir(out_dir)
+    n_batches = len(q.recentProgress)
+    assert n_batches >= len(batches)
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == n_batches, (len(jobs), n_batches)
+
+
+def test_partitioned_file_sink_marks_exactly_the_touched_hours(spark, tmp_path):
+    # First file alone: its windows stay open under the watermark, so
+    # every batch is empty. The sink must return without a marker.
+    first = [("1", 27, 3585), ("2", 31, 3590), ("1", 29, 3600), ("2", 26, 3600)]
+    src = _write_batches(spark, tmp_path / "open", [first])
+    q, out_dir = _drain_to_partitioned_files(spark, tmp_path, src, "open")
+    assert q.recentProgress
+    assert _hour_dirs(out_dir, "_SUCCESS") == set()
+
+    # The second file moves the watermark past both hours' windows:
+    # one batch writes hour 0 and hour 1, the hour-2 row stays in
+    # state, and only the two written hours get a marker.
+    src = _write_batches(spark, tmp_path / "closed", [first, [("1", 28, 7300)]])
+    _, out_dir = _drain_to_partitioned_files(spark, tmp_path, src, "closed")
+    hours = {
+        os.path.join("year=2024", "month=1", "day=1", f"hour={h}") for h in (0, 1)
+    }
+    assert _hour_dirs(out_dir, "_SUCCESS") == hours
+    assert _hour_dirs(out_dir, "part-*") == hours
+
+
 def test_upsert_latest_sink_merges_and_is_idempotent(spark, tmp_path):
     # Latest-per-key upsert target: batch0 seeds sensors 1/2, batch1
     # updates sensor 1 and adds 3. Final table = one row per sensor

@@ -84,7 +84,7 @@ def main() -> None:
                 continue
             table = os.path.basename(loc.group(1).rstrip("/"))
             per_table.setdefault(table, set()).add(sid)
-        unresolved = tree_scan_ids - resolved
+        unresolved = tree_scan_ids - cached_ids - resolved
         if unresolved:
             print(
                 f"{name}: WARN unresolved scan ids {sorted(unresolved)}"
