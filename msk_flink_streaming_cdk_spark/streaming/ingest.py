@@ -6,13 +6,22 @@ The reference's streaming surface is fixed-window aggregation
 same micro-batch machinery to the LLM-pipeline admission shape: each
 arriving batch of documents is scored against the accumulated corpus
 index and admitted/rejected, with admitted documents folding into the
-maintained index. Five gates, each the streaming twin of an
-oracle-checked batch operator: Jaccard near-dup
-(``incremental_near_dup``), component maintenance
-(``incremental_connected_components``), winnowing fingerprints
-(``winnow_fingerprints`` — fuzzy MOSS overlap), CDC chunk ratio
-(``cdc_chunks``), and exact-substring contamination
-(``gram_position_classes`` — any verbatim min_len-char overlap).
+maintained index. Seven streams, each the streaming twin of an
+oracle-checked batch operator:
+
+- stateless probes against a caller-maintained corpus: Jaccard
+  near-dup (``incremental_near_dup``) and embedding near-dup
+  (``incremental_embedding_near_dup``);
+- maintained-index folds: component maintenance
+  (``incremental_connected_components``) and k-NN forget propagation
+  (``nndescent_forget_compact``);
+- admission gates on one skeleton (``_admission_stream``): winnowing
+  fingerprints (``winnow_fingerprints`` — fuzzy MOSS overlap), CDC
+  chunk ratio (``cdc_chunks``), and exact-substring contamination
+  (``gram_position_classes`` — any verbatim min_len-char overlap).
+
+All seven start through ``_start``, the module's one ``foreachBatch``
+start path.
 
 Design: ``foreachBatch`` per-batch composition, NOT a stateful
 streaming operator. The corpus/labels are maintained TABLES (persisted
@@ -34,10 +43,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
+    cdc_chunks,
     connected_components,
+    gram_position_classes,
     incremental_connected_components,
     incremental_near_dup,
+    winnow_fingerprints,
 )
+
+
+def _start(stream: DataFrame, checkpoint: str, fn, trigger: dict | None):
+    """Start ``fn`` as the ``foreachBatch`` body of ``stream``; with no
+    ``trigger`` the query drains what has landed, then stops."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
 
 
 def _guard_index_restart(
@@ -78,6 +101,59 @@ def _guard_index_restart(
         )
 
 
+def _union(index: DataFrame | None, admitted: DataFrame) -> DataFrame:
+    return admitted if index is None else index.unionByName(admitted)
+
+
+def _admission_stream(
+    incoming: DataFrame,
+    checkpoint: str,
+    on_batch: Callable[[DataFrame, int], None],
+    initial: DataFrame | None,
+    key: str,
+    trigger: dict | None,
+    featurize: Callable[[DataFrame], DataFrame],
+    decide: Callable[[DataFrame, DataFrame, DataFrame | None], DataFrame],
+    fold: Callable[[DataFrame | None, DataFrame], DataFrame] = _union,
+):
+    """The admission-gate skeleton: per micro-batch, ``featurize`` the
+    documents, ``decide(ids, features, index)`` each distinct
+    ``doc_id`` against the maintained index (``None`` until the first
+    batch folds in, unless ``initial`` seeds it), hand the decisions
+    to ``on_batch(decisions, batch_id)``, then ``fold`` the ADMITTED
+    docs' features into the index. Returns ``(query, state)`` with
+    the index at ``state[key]``; ``decide`` must emit a boolean
+    ``admitted`` column.
+
+    The maintained-table contract every gate on this skeleton shares:
+    the index is the pipeline's maintained TABLE. Here it is an
+    eagerly local-checkpointed frame swapped per batch (features,
+    decisions and the new index are each cut, so batch N's plan never
+    contains batches 1..N-1); production writes it to a real
+    table/Delta target in ``on_batch`` and passes it back as
+    ``initial_<key>`` on restart. The checkpoint dir carries only
+    source offsets, never the index, and ``_guard_index_restart``
+    refuses a resume that would silently start from a blank index.
+    Admission is sequential by construction: a doc's decision depends
+    on the index as it stood at its batch's start, matching the
+    batch-fold replay the tests pin.
+    """
+    _guard_index_restart(incoming, checkpoint, initial, f"initial_{key}")
+    state: dict = {key: initial}
+
+    def gate(batch_df: DataFrame, batch_id: int) -> None:
+        ids = batch_df.select("doc_id").distinct()
+        feats = featurize(batch_df).localCheckpoint(eager=True)
+        decisions = decide(ids, feats, state[key]).localCheckpoint(eager=True)
+        on_batch(decisions, batch_id)
+        admitted = feats.join(
+            decisions.filter("admitted").select("doc_id"), "doc_id"
+        )
+        state[key] = fold(state[key], admitted).localCheckpoint(eager=True)
+
+    return _start(incoming, checkpoint, gate, trigger), state
+
+
 def near_dup_admission_stream(
     incoming: DataFrame,
     corpus: DataFrame,
@@ -95,20 +171,14 @@ def near_dup_admission_stream(
     per batch here; persist it upstream to amortize across batches —
     the memoized ``shared_pair_graph`` posture).
     """
-    trigger = trigger or {"availableNow": True}
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        decisions = incremental_near_dup(
-            corpus, batch_df, threshold=threshold
+        on_batch(
+            incremental_near_dup(corpus, batch_df, threshold=threshold),
+            batch_id,
         )
-        on_batch(decisions, batch_id)
 
-    return (
-        incoming.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
+    return _start(incoming, checkpoint, gate, trigger)
 
 
 def embedding_admission_stream(
@@ -133,22 +203,17 @@ def embedding_admission_stream(
     integer planes guarantee the index stays valid across sessions
     and engines (the reason this gate does NOT use gaussian planes).
     """
-    trigger = trigger or {"availableNow": True}
-
     from ..operators.similarity import incremental_embedding_near_dup
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
-        decisions = incremental_embedding_near_dup(
-            corpus, batch_df, threshold=threshold
+        on_batch(
+            incremental_embedding_near_dup(
+                corpus, batch_df, threshold=threshold
+            ),
+            batch_id,
         )
-        on_batch(decisions, batch_id)
 
-    return (
-        incoming.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
+    return _start(incoming, checkpoint, gate, trigger)
 
 
 def component_maintenance_stream(
@@ -166,21 +231,16 @@ def component_maintenance_stream(
     by touched classes + batch), and the updated full labeling is
     handed to ``on_update``.
 
-    The labeling is the pipeline's maintained table: here it lives as
-    an eagerly local-checkpointed frame swapped per batch (bounded by
-    node count, lineage truncated so batch N's plan never contains
-    batches 1..N-1); a production deployment writes it to a real
-    table/Delta target in ``on_update`` and passes it back as
-    ``initial_labels`` on restart — the checkpoint dir only carries
-    source offsets, never the labeling, so state size is independent
-    of the streaming engine. Batch-equivalence (any edge-batch split
-    ends at full-graph CC) is the property the incremental operator
-    already pins; the replay test re-pins it end-to-end.
+    The labeling (bounded by node count) follows the maintained-table
+    contract of ``_admission_stream``: a lineage-cut frame swapped per
+    batch here, passed back as ``initial_labels`` on restart.
+    Batch-equivalence (any edge-batch split ends at full-graph CC) is
+    the property the incremental operator already pins; the replay
+    test re-pins it end-to-end.
     """
     _guard_index_restart(
         edge_stream, checkpoint, initial_labels, "initial_labels"
     )
-    trigger = trigger or {"availableNow": True}
     state: dict = {"labels": initial_labels}
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -196,13 +256,7 @@ def component_maintenance_stream(
         if on_update is not None:
             on_update(labels, batch_id)
 
-    query = (
-        edge_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
-    return query, state
+    return _start(edge_stream, checkpoint, fold, trigger), state
 
 
 def knn_forget_stream(
@@ -226,12 +280,10 @@ def knn_forget_stream(
     the maintained corpus, and the updated (graph, corpus) pair is
     handed to ``on_update``.
 
-    Same maintained-table posture as ``component_maintenance_stream``:
-    graph and corpus live as eagerly local-checkpointed frames swapped
-    per batch (lineage truncated so batch N's plan never contains
-    batches 1..N-1); a production deployment writes both to real
-    tables in ``on_update`` and passes them back on restart — the
-    checkpoint dir carries only source offsets, never the index.
+    Graph and corpus follow the maintained-table contract of
+    ``_admission_stream``: lineage-cut frames swapped per batch here,
+    written to real tables in ``on_update`` and passed back on
+    restart in production.
 
     ``n_bits`` is resolved ONCE against the initial corpus and pinned
     for every batch: the repair stage must re-hash with the graph's
@@ -245,7 +297,6 @@ def knn_forget_stream(
     """
     from ..operators.similarity import _auto_bits, nndescent_forget_compact
 
-    trigger = trigger or {"availableNow": True}
     bits = _auto_bits(corpus, n_bits)
     state: dict = {"graph": graph, "corpus": corpus}
 
@@ -273,13 +324,7 @@ def knn_forget_stream(
         if on_update is not None:
             on_update(new_graph, batch_id)
 
-    query = (
-        forget_stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
-    )
-    return query, state
+    return _start(forget_stream, checkpoint, fold, trigger), state
 
 
 def winnowing_admission_stream(
@@ -307,15 +352,9 @@ def winnowing_admission_stream(
     the corpus-side document-frequency gate (fingerprints in >
     ``max_df`` corpus docs are stopword grams, dropped before the
     join) — so every bucket is bounded and the join is skew-proof,
-    identical to the batch query's candidate generation. The index is
-    the pipeline's maintained TABLE: here an eagerly
-    lineage-truncated frame swapped per batch (batch N's plan never
-    contains batches 1..N-1); production writes it to a real
-    table/Delta target in ``on_batch`` and passes it back as
-    ``initial_fps`` on restart — the checkpoint dir carries only
-    source offsets. Admission is sequential by construction (a doc's
-    decision depends on what was admitted before it), matching the
-    batch-fold replay the test pins.
+    identical to the batch query's candidate generation. The index
+    (``state["fps"]``, restart seed ``initial_fps``) follows the
+    maintained-table contract of ``_admission_stream``.
 
     Per-batch cost note: the df-gate re-aggregates the index here
     (O(index) per batch — fine for the frame-swap posture, whose
@@ -324,78 +363,52 @@ def winnowing_admission_stream(
     keyed on h, +1 per admitted fingerprint) so each batch touches
     only its own keys.
     """
-    from ..operators.dedup import winnow_fingerprints
 
-    _guard_index_restart(incoming, checkpoint, initial_fps, "initial_fps")
-    trigger = trigger or {"availableNow": True}
-    state: dict = {"fps": initial_fps}
-
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        ids = batch_df.select("doc_id").distinct()
-        bfps = winnow_fingerprints(batch_df).localCheckpoint(eager=True)
-        corpus = state["fps"]
+    def decide(ids, bfps, corpus):
         if corpus is None:
-            matches = None
-        else:
-            keep = (
-                corpus.groupBy("h")
-                .agg(F.countDistinct("doc_id").alias("df"))
-                .filter(F.col("df") <= max_df)
-                .select("h")
-            )
-            gated = corpus.join(keep, "h")
-            matches = (
-                bfps.alias("b")
-                .join(gated.alias("c"), "h")
-                .groupBy(
-                    F.col("b.doc_id").alias("doc_id"),
-                    F.col("c.doc_id").alias("matched_doc"),
-                )
-                .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
-                .filter(F.col("shared_fps") >= min_shared)
-            )
-        if matches is None:
-            decisions = ids.select(
+            return ids.select(
                 "doc_id",
                 F.lit(None).cast("long").alias("matched_doc"),
                 F.lit(None).cast("long").alias("shared_fps"),
                 F.lit(True).alias("admitted"),
             )
-        else:
-            best = matches.groupBy("doc_id").agg(
-                F.max_by(
-                    F.struct("matched_doc", "shared_fps"),
-                    F.struct(
-                        F.col("shared_fps"),
-                        (-F.col("matched_doc")).alias("neg"),
-                    ),
-                ).alias("m")
-            )
-            decisions = ids.join(best, "doc_id", "left").select(
-                "doc_id",
-                F.col("m.matched_doc").alias("matched_doc"),
-                F.col("m.shared_fps").alias("shared_fps"),
-                F.col("m").isNull().alias("admitted"),
-            )
-        decisions = decisions.localCheckpoint(eager=True)
-        on_batch(decisions, batch_id)
-        admitted_fps = bfps.join(
-            decisions.filter("admitted").select("doc_id"), "doc_id"
+        keep = (
+            corpus.groupBy("h")
+            .agg(F.countDistinct("doc_id").alias("df"))
+            .filter(F.col("df") <= max_df)
+            .select("h")
         )
-        new_index = (
-            admitted_fps
-            if state["fps"] is None
-            else state["fps"].unionByName(admitted_fps)
+        gated = corpus.join(keep, "h")
+        matches = (
+            bfps.alias("b")
+            .join(gated.alias("c"), "h")
+            .groupBy(
+                F.col("b.doc_id").alias("doc_id"),
+                F.col("c.doc_id").alias("matched_doc"),
+            )
+            .agg(F.count(F.lit(1)).cast("long").alias("shared_fps"))
+            .filter(F.col("shared_fps") >= min_shared)
         )
-        state["fps"] = new_index.localCheckpoint(eager=True)
+        best = matches.groupBy("doc_id").agg(
+            F.max_by(
+                F.struct("matched_doc", "shared_fps"),
+                F.struct(
+                    F.col("shared_fps"),
+                    (-F.col("matched_doc")).alias("neg"),
+                ),
+            ).alias("m")
+        )
+        return ids.join(best, "doc_id", "left").select(
+            "doc_id",
+            F.col("m.matched_doc").alias("matched_doc"),
+            F.col("m.shared_fps").alias("shared_fps"),
+            F.col("m").isNull().alias("admitted"),
+        )
 
-    query = (
-        incoming.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
+    return _admission_stream(
+        incoming, checkpoint, on_batch, initial_fps, "fps", trigger,
+        winnow_fingerprints, decide,
     )
-    return query, state
 
 
 def cdc_chunk_dedup_stream(
@@ -418,25 +431,19 @@ def cdc_chunk_dedup_stream(
 
     Emits per incoming doc: (doc_id, n_chunks, n_dup, dup_ratio,
     admitted). Probe is an equi-join on chunk_md5 against the
-    distinct index; the index is the maintained-table posture of
-    ``winnowing_admission_stream`` (lineage-truncated swap locally,
-    real table in production via ``initial_chunks``).
+    distinct index; the index (``state["chunks"]``, restart seed
+    ``initial_chunks``) follows the maintained-table contract of
+    ``_admission_stream``.
     """
-    from ..operators.dedup import cdc_chunks
 
-    _guard_index_restart(incoming, checkpoint, initial_chunks, "initial_chunks")
-    trigger = trigger or {"availableNow": True}
-    state: dict = {"chunks": initial_chunks}
-
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        ids = batch_df.select("doc_id").distinct()
-        ch = (
+    def featurize(batch_df):
+        return (
             cdc_chunks(batch_df)
             .filter(F.col("clen") >= min_chunk_len)
             .select("doc_id", "chunk_md5")
-            .localCheckpoint(eager=True)
         )
-        index = state["chunks"]
+
+    def decide(ids, ch, index):
         if index is None:
             per_doc = ch.groupBy("doc_id").agg(
                 F.count(F.lit(1)).cast("long").alias("n_chunks"),
@@ -456,7 +463,7 @@ def cdc_chunk_dedup_stream(
                 .join(hit, "doc_id", "left")
                 .withColumn("n_dup", F.coalesce("n_dup", F.lit(0)))
             )
-        decisions = (
+        return (
             ids.join(per_doc, "doc_id", "left")
             .select(
                 "doc_id",
@@ -475,24 +482,12 @@ def cdc_chunk_dedup_stream(
             .withColumn(
                 "admitted", F.col("dup_ratio") <= F.lit(max_dup_ratio)
             )
-            .localCheckpoint(eager=True)
         )
-        on_batch(decisions, batch_id)
-        adm = ch.join(
-            decisions.filter("admitted").select("doc_id"), "doc_id"
-        )
-        new_index = (
-            adm if state["chunks"] is None else state["chunks"].unionByName(adm)
-        )
-        state["chunks"] = new_index.localCheckpoint(eager=True)
 
-    query = (
-        incoming.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
+    return _admission_stream(
+        incoming, checkpoint, on_batch, initial_chunks, "chunks", trigger,
+        featurize, decide,
     )
-    return query, state
 
 
 def substring_contamination_stream(
@@ -524,82 +519,47 @@ def substring_contamination_stream(
     Scale shape: the probe is a left-semi equi-join on the 16-byte
     class id (batch positions x index — skew-proof, never a cartesian);
     the per-doc island merge windows only over HIT positions. The
-    index is the maintained-TABLE posture of the sibling gates
-    (lineage-truncated swap locally; production MERGEs the distinct
-    (h1, h2) keys into a real table and passes it back on restart —
-    the checkpoint dir carries only source offsets, enforced by the
-    same restart guard).
+    index holds the distinct (h1, h2) keys (``state["index"]``) and
+    follows the maintained-table contract of ``_admission_stream``;
+    production MERGEs those keys into a real table.
     """
     from pyspark.sql import Window
 
-    from ..operators.dedup import gram_position_classes
-
-    _guard_index_restart(
-        incoming, checkpoint, initial_index, "initial_index"
-    )
-    trigger = trigger or {"availableNow": True}
-    state: dict = {"index": initial_index}
     T = int(min_len)
 
-    def gate(batch_df: DataFrame, batch_id: int) -> None:
-        ids = batch_df.select("doc_id").distinct()
-        g = gram_position_classes(
-            batch_df, min_len=T
-        ).localCheckpoint(eager=True)
-        index = state["index"]
+    def decide(ids, g, index):
         if index is None:
-            per_doc = None
-        else:
-            hits = g.join(index, ["h1", "h2"], "left_semi")
-            w = Window.partitionBy("doc_id").orderBy("p")
-            isl = hits.withColumn(
-                "grp", F.col("p") - F.row_number().over(w)
-            )
-            runs = isl.groupBy("doc_id", "grp").agg(
-                (F.max("p") - F.min("p") + T).alias("span_len")
-            )
-            per_doc = runs.groupBy("doc_id").agg(
-                F.count(F.lit(1)).cast("long").alias("n_spans"),
-                F.max("span_len").cast("long").alias("max_span_len"),
-            )
-        if per_doc is None:
-            decisions = ids.select(
+            return ids.select(
                 "doc_id",
                 F.lit(0).cast("long").alias("n_spans"),
                 F.lit(0).cast("long").alias("max_span_len"),
                 F.lit(True).alias("admitted"),
             )
-        else:
-            decisions = ids.join(per_doc, "doc_id", "left").select(
-                "doc_id",
-                F.coalesce("n_spans", F.lit(0))
-                .cast("long")
-                .alias("n_spans"),
-                F.coalesce("max_span_len", F.lit(0))
-                .cast("long")
-                .alias("max_span_len"),
-                F.col("n_spans").isNull().alias("admitted"),
-            )
-        decisions = decisions.localCheckpoint(eager=True)
-        on_batch(decisions, batch_id)
-        adm = (
-            g.join(
-                decisions.filter("admitted").select("doc_id"), "doc_id"
-            )
-            .select("h1", "h2")
-            .distinct()
+        hits = g.join(index, ["h1", "h2"], "left_semi")
+        w = Window.partitionBy("doc_id").orderBy("p")
+        isl = hits.withColumn("grp", F.col("p") - F.row_number().over(w))
+        runs = isl.groupBy("doc_id", "grp").agg(
+            (F.max("p") - F.min("p") + T).alias("span_len")
         )
-        new_index = (
-            adm
-            if state["index"] is None
-            else state["index"].unionByName(adm).distinct()
+        per_doc = runs.groupBy("doc_id").agg(
+            F.count(F.lit(1)).cast("long").alias("n_spans"),
+            F.max("span_len").cast("long").alias("max_span_len"),
         )
-        state["index"] = new_index.localCheckpoint(eager=True)
+        return ids.join(per_doc, "doc_id", "left").select(
+            "doc_id",
+            F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
+            F.coalesce("max_span_len", F.lit(0))
+            .cast("long")
+            .alias("max_span_len"),
+            F.col("n_spans").isNull().alias("admitted"),
+        )
 
-    query = (
-        incoming.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**trigger)
-        .start()
+    def fold(index, admitted):
+        adm = admitted.select("h1", "h2").distinct()
+        return adm if index is None else index.unionByName(adm).distinct()
+
+    return _admission_stream(
+        incoming, checkpoint, on_batch, initial_index, "index", trigger,
+        lambda batch_df: gram_position_classes(batch_df, min_len=T),
+        decide, fold,
     )
-    return query, state

@@ -24,21 +24,20 @@ def write_partitioned_files(
     checkpoint: str,
     fmt: str = "json",
     partition_cols: tuple[str, ...] = ("year", "month", "day", "hour"),
-    success_file_per_partition: bool = True,
     trigger: dict | None = None,
 ):
     """Start a partitioned file sink (returns StreamingQuery).
 
-    With ``success_file_per_partition`` a ``foreachBatch`` writer
-    appends the micro-batch under Hive-style partition dirs and then
-    marks each touched partition with a ``_SUCCESS`` file — the
-    reference's partition-commit policy (main.py:74-75). The touched
-    partition tuples come from the write's own ``Observation`` (a
-    ``collect_set`` evaluated inside the write job), so each batch runs
-    its plan once: no second pass over the batch, and, for a stateful
-    upstream, no second load and commit of its state stores. The list
-    is tiny (distinct partition tuples, not rows), so the driver-side
-    marker loop is O(#partitions), not O(rows).
+    A ``foreachBatch`` writer appends each micro-batch under Hive-style
+    partition dirs and then marks each touched partition with a
+    ``_SUCCESS`` file — the reference's partition-commit policy
+    (main.py:74-75). The touched partition tuples come from the write's
+    own ``Observation`` (a ``collect_set`` evaluated inside the write
+    job), so each batch runs its plan once: no second pass over the
+    batch, and, for a stateful upstream, no second load and commit of
+    its state stores. The list is tiny (distinct partition tuples, not
+    rows), so the driver-side marker loop is O(#partitions), not
+    O(rows).
 
     Delay semantics difference (deliberate): the reference configures
     ``sink.partition-commit.delay = 1 min`` (main.py:74) — Flink holds
@@ -52,18 +51,6 @@ def write_partitioned_files(
     level triggers the practical effect matches the reference's 1-min
     lag.
     """
-    trigger = trigger or {"availableNow": True}
-
-    if not success_file_per_partition:
-        writer = (
-            df.writeStream.format(fmt)
-            .option("path", path)
-            .option("checkpointLocation", checkpoint)
-            .partitionBy(*partition_cols)
-            .outputMode("append")
-        )
-        return writer.trigger(**trigger).start()
-
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         # The touched partition tuples ride along with the write as an
         # observed metric, so the batch plan (and any state-store load
@@ -104,7 +91,7 @@ def write_partitioned_files(
         df.writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .trigger(**trigger)
+        .trigger(**(trigger or {"availableNow": True}))
         .start()
     )
 

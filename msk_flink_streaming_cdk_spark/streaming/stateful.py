@@ -275,36 +275,6 @@ def interval_join(
     return joined.drop(rw[key])
 
 
-def near_dup_admission_gate(
-    new_docs: DataFrame,
-    corpus_bands: DataFrame,
-    num_perm: int = 16,
-    bands: int = 4,
-    k: int = 5,
-) -> DataFrame:
-    """Streaming near-dup admission gate: incoming documents are
-    MinHash-banded IN the stream (pure Catalyst HOFs work unchanged
-    under readStream) and stream-static joined against the corpus's
-    precomputed LSH index — the contamination/dedup check a training
-    corpus runs BEFORE admitting new data, without re-scanning the
-    corpus per batch.
-
-    Emits one row per (incoming doc, corpus doc, band) collision; band
-    multiplicity is left to the consumer to collapse (a per-sink
-    ``dropDuplicates`` or downstream aggregate), keeping this operator
-    stateless — each micro-batch hash-joins against the (broadcast
-    or shuffled) static index and carries no streaming state at all.
-    """
-    from ..operators.dedup import hashed_shingles, minhash_bands
-
-    sh = hashed_shingles(new_docs, k, parallelize=False)
-    incoming = minhash_bands(sh, num_perm, bands)
-    index = corpus_bands.withColumnRenamed("doc_id", "corpus_doc_id")
-    return incoming.join(index, ["band_id", "band_hash"]).select(
-        F.col("doc_id").alias("new_doc_id"), "corpus_doc_id"
-    )
-
-
 TOPK_OUTPUT_SCHEMA = "sensor_id string, n_seen long, topk array<long>"
 _TOPK_STATE_SCHEMA = "n long, heap array<long>"
 
@@ -348,41 +318,6 @@ def topk_by_key(readings: DataFrame, k: int = 3) -> DataFrame:
         stateStructType=_TOPK_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def embedding_admission_gate(
-    new_vecs: DataFrame,
-    corpus_hashed: DataFrame,
-    n_bits: int = 6,
-    n_tables: int = 16,
-    seed: int = 42,
-    dim: int = 64,
-) -> DataFrame:
-    """Streaming semantic-dup admission gate: incoming embedding rows
-    are sign-LSH bucketed IN the stream (the same Arrow bucketing UDF
-    the batch path uses works unchanged under readStream) and
-    stream-static joined against the corpus's precomputed
-    (table_id, bucket) index — the embedding-space counterpart of
-    ``near_dup_admission_gate``. Emits one (new_vec_id,
-    corpus_vec_id, table_id) collision row per bucket hit; exact
-    cosine re-ranking happens on the (small) collision stream, not
-    here. Stateless per micro-batch: no streaming state, the index is
-    a static DataFrame refreshed by recreating the query."""
-    from ..operators.similarity import _bucket_udf, hyperplanes
-
-    bucket_udf = _bucket_udf(
-        [hyperplanes(dim, n_bits, seed + 1000 * t) for t in range(n_tables)]
-    )
-    incoming = new_vecs.select(
-        F.col("vec_id").alias("new_vec_id"),
-        F.posexplode(bucket_udf(F.col("embedding"))).alias(
-            "table_id", "bucket"
-        ),
-    )
-    index = corpus_hashed.withColumnRenamed("vec_id", "corpus_vec_id")
-    return incoming.join(index, ["table_id", "bucket"]).select(
-        "new_vec_id", "corpus_vec_id", "table_id"
     )
 
 

@@ -696,63 +696,6 @@ def test_windowed_agg_restart_from_checkpoint_exactly_once(spark, tmp_path):
     assert ("1", T0, 2) in final and len(final) == len(set(final))
 
 
-def test_streaming_near_dup_admission_gate(spark, tmp_path, sf_small):
-    # New docs stream through a MinHash-LSH gate against the STATIC
-    # corpus index: a near-copy of a corpus document must collide, a
-    # novel document must pass clean.
-    import os
-
-    from msk_flink_streaming_cdk_spark.operators.dedup import (
-        hashed_shingles,
-        minhash_bands,
-    )
-    from msk_flink_streaming_cdk_spark.sources.files import (
-        stream_parquet_dir,
-    )
-    from msk_flink_streaming_cdk_spark.sources.fixtures import load_table
-    from msk_flink_streaming_cdk_spark.streaming.stateful import (
-        near_dup_admission_gate,
-    )
-
-    docs = load_table(spark, sf_small, "documents")
-    corpus_bands = minhash_bands(hashed_shingles(docs))
-    victim = docs.orderBy("doc_id").first()
-    near_copy = victim.text + " extra tail words appended here"
-    novel = " ".join(f"zq{i}xw unique nonsense token" for i in range(40))
-
-    src = str(tmp_path / "incoming")
-    os.makedirs(src)
-    spark.createDataFrame(
-        [(100000, near_copy), (100001, novel)],
-        "doc_id long, text string",
-    ).coalesce(1).write.parquet(str(tmp_path / "stage"))
-    import glob as _glob
-
-    (f,) = _glob.glob(str(tmp_path / "stage" / "*.parquet"))
-    os.rename(f, os.path.join(src, "batch0.parquet"))
-
-    stream = stream_parquet_dir(
-        spark, src, docs.select("doc_id", "text").schema
-    )
-    gate = near_dup_admission_gate(stream, corpus_bands)
-    q = (
-        gate.writeStream.format("memory")
-        .queryName("ndg_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    hits = {
-        (r.new_doc_id, r.corpus_doc_id)
-        for r in spark.sql("SELECT * FROM ndg_test").collect()
-    }
-    flagged = {n for (n, _) in hits}
-    assert 100000 in flagged          # near-copy collides
-    assert 100001 not in flagged      # novel passes clean
-    assert (100000, victim.doc_id) in hits  # and with the right victim
-
-
 def test_topk_state_bounded_across_batches(spark, tmp_path):
     from msk_flink_streaming_cdk_spark.streaming.stateful import topk_by_key
 
@@ -780,59 +723,6 @@ def test_topk_state_bounded_across_batches(spark, tmp_path):
     # 3 values between batches (bounded-state invariant).
     assert final["1"] == (5, [32, 31, 30])
     assert final["2"] == (2, [33, 27])
-
-
-def test_embedding_admission_gate_flags_known_vectors(spark, tmp_path):
-    import os
-
-    from pyspark.sql import functions as F
-
-    from msk_flink_streaming_cdk_spark.operators.similarity import (
-        _bucket_udf,
-        hyperplanes,
-    )
-    from msk_flink_streaming_cdk_spark.sources.fixtures import load_table
-    from msk_flink_streaming_cdk_spark.streaming.stateful import (
-        embedding_admission_gate,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    # static corpus index: hash every corpus vector once
-    bucket_udf = _bucket_udf(
-        [hyperplanes(64, 6, 42 + 1000 * t) for t in range(16)]
-    )
-    corpus_hashed = emb.select(
-        "vec_id",
-        F.posexplode(bucket_udf(F.col("embedding"))).alias(
-            "table_id", "bucket"
-        ),
-    )
-    # stream two EXACT corpus vectors (relabeled) + nothing else: an
-    # identical vector collides with its twin in every table.
-    probe = emb.filter(F.col("vec_id") < 2).select(
-        (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
-    )
-    src = os.path.join(str(tmp_path), "emb_src")
-    probe.coalesce(1).write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(probe.schema).parquet(src)
-    out = embedding_admission_gate(stream, corpus_hashed)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("emb_gate_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql(
-        "SELECT new_vec_id, corpus_vec_id, count(*) AS n FROM emb_gate_test "
-        "GROUP BY 1, 2"
-    ).collect()
-    hits = {(r.new_vec_id, r.corpus_vec_id): r.n for r in rows}
-    # each probe must collide with its identical twin in ALL 16 tables
-    assert hits.get((10000, 0)) == 16
-    assert hits.get((10001, 1)) == 16
 
 
 def test_streaming_funnel_stages_across_batches(spark, tmp_path):

@@ -1254,6 +1254,74 @@ def _stage_file(spark, df, tmp_path, src_name, file_name, order):
     return src
 
 
+_GATE_TEXT = (
+    "document {} talks about streaming admission gates that keep a "
+    "maintained index outside the checkpoint and must refuse a blind resume"
+)
+_GATE_DOCS = (
+    "doc_id long, text string",
+    [[(1, _GATE_TEXT.format(1))], [(2, _GATE_TEXT.format(2))]],
+)
+
+
+@pytest.mark.parametrize(
+    "gate, initial, key, data",
+    [
+        ("winnowing_admission_stream", "initial_fps", "fps", _GATE_DOCS),
+        ("cdc_chunk_dedup_stream", "initial_chunks", "chunks", _GATE_DOCS),
+        ("substring_contamination_stream", "initial_index", "index", _GATE_DOCS),
+        (
+            "component_maintenance_stream", "initial_labels", "labels",
+            ("doc_a long, doc_b long", [[(1, 2), (3, 4)], [(2, 3)]]),
+        ),
+    ],
+    ids=["winnowing", "cdc", "substring", "components"],
+)
+def test_indexed_gate_refuses_resume_without_its_index(
+    spark, tmp_path, gate, initial, key, data
+):
+    # Every gate whose index lives outside the checkpoint refuses to
+    # resume a checkpoint with committed offsets when no index is
+    # passed back (it would silently probe an empty index); an
+    # explicit empty frame is a deliberate reset that starts and
+    # resumes from the stored offsets (only the new file is read).
+    from pyspark.sql.types import _parse_datatype_string
+
+    from msk_flink_streaming_cdk_spark.streaming import ingest
+
+    start = getattr(ingest, gate)
+    schema, files = data
+    st = _parse_datatype_string(schema)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    ckpt = str(tmp_path / "ckpt")
+
+    def land(i):
+        part = str(tmp_path / f"part{i}")
+        spark.createDataFrame(files[i], st).coalesce(1).write.parquet(part)
+        (f,) = glob.glob(os.path.join(part, "*.parquet"))
+        os.rename(f, os.path.join(src, f"b{i}.parquet"))
+
+    seen = []
+
+    def run(index):
+        stream = stream_parquet_dir(spark, src, st, max_files_per_trigger=1)
+        return start(
+            stream, ckpt, lambda df, bid: seen.append(bid), **{initial: index}
+        )
+
+    land(0)
+    q, state = run(None)
+    assert q.awaitTermination(120)
+    assert q.exception() is None and seen == [0]
+    land(1)
+    with pytest.raises(ValueError, match="committed offsets"):
+        run(None)
+    q, _ = run(state[key].limit(0))
+    assert q.awaitTermination(120)
+    assert q.exception() is None and seen == [0, 1]
+
+
 def test_component_labels_roundtrip_table_across_sessions(
     spark, tmp_path
 ):
