@@ -291,14 +291,16 @@ def _streaming_rate(spark, sf_dir: str) -> dict:
     import shutil
     import tempfile
 
+    from msk_flink_streaming_cdk_spark.jobs import REFERENCE_WATERMARK
+    from msk_flink_streaming_cdk_spark.operators.reference import (
+        q1_high_temp_alerts,
+        q2_windowed_avg,
+    )
     from msk_flink_streaming_cdk_spark.sources.files import stream_parquet_dir
     from msk_flink_streaming_cdk_spark.sources.fixtures import (
         sensor_readings_dense,
     )
-    from msk_flink_streaming_cdk_spark.streaming.pipelines import (
-        q1_stream,
-        q2_stream,
-    )
+    from msk_flink_streaming_cdk_spark.streaming.sinks import start
 
     tmp = tempfile.mkdtemp(prefix="bench_stream_")
     # State-store partitioning sized to key cardinality: the reference
@@ -332,15 +334,19 @@ def _streaming_rate(spark, sf_dir: str) -> dict:
 
         t0 = time.perf_counter()
         queries = []
-        for name, build in (("q1", q1_stream), ("q2", q2_stream)):
+        for name, build in (
+            ("q1", q1_high_temp_alerts),
+            ("q2", q2_windowed_avg),
+        ):
             stream = build(
-                stream_parquet_dir(spark, src, schema, max_files_per_trigger=4)
+                stream_parquet_dir(spark, src, schema, max_files_per_trigger=4),
+                watermark=REFERENCE_WATERMARK,
             )
             queries.append(
-                stream.writeStream.foreachBatch(sink(name))
-                .option("checkpointLocation", os.path.join(tmp, f"ckpt_{name}"))
-                .trigger(availableNow=True)
-                .start()
+                start(
+                    stream.writeStream.foreachBatch(sink(name)),
+                    os.path.join(tmp, f"ckpt_{name}"),
+                )
             )
         for q in queries:
             q.awaitTermination()

@@ -6,6 +6,20 @@ INSERTs in one StatementSet → execute. Spark analogue: session →
 config → source builder → Q1/Q2 transforms → two streaming queries
 (or Kafka-less file mode for local runs).
 
+Reference shape (``main.py:146-149``): one StatementSet executing two
+INSERTs — Q1 → Kafka alert topic, Q2 → partitioned S3 — over a shared
+Kafka scan with a 5s watermark. Here the same Q1/Q2 transforms
+(operators/reference.py) run with ``withWatermark`` in **append**
+output mode (emission parity with Flink group windows, SURVEY §2.7 W6)
+as two StreamingQueries with independent checkpoints. Offsets across
+sinks are independently committed (documented delta from Flink's
+single-job atomicity — SURVEY §7 risk 4).
+
+The two queries share the cores that run the job: each query's
+stateful shuffle gets half of them (``state_partitions``), one state
+store per core across the job, when the query first starts. Spark
+freezes that count in the checkpoint, so a restart keeps it.
+
 Run locally (file mode):
     python -m msk_flink_streaming_cdk_spark.jobs \
         --properties props.json --source-dir in/ --mode file
@@ -19,12 +33,26 @@ import os
 from pyspark.sql import SparkSession
 
 from .config import ReferenceJobConfig, load_job_config
+from .operators.reference import q1_high_temp_alerts, q2_windowed_avg
 from .schemas import SENSOR_READING
 from .session import get_spark
 from .sources.files import stream_parquet_dir
-from .sources.kafka import read_kafka_json, sink_options, write_kafka_json
-from .streaming.pipelines import run_reference_pipelines
-from .streaming.sinks import write_partitioned_files
+from .sources.kafka import read_kafka_json, sink_options, to_kafka_json
+from .streaming.sinks import start, write_partitioned_files
+
+REFERENCE_WATERMARK = "5 seconds"  # main.py:18
+STATEFUL_QUERIES = 2  # Q1 and Q2 run at once and share the cores
+
+
+def state_partitions(spark: SparkSession) -> int:
+    """State stores per stateful query of the reference job: the cores
+    running the job (``local[n]`` locally, total executor cores on a
+    cluster) split between its ``STATEFUL_QUERIES`` concurrent queries,
+    so the job holds one store per core. Every store is loaded and
+    committed each micro-batch, so more stores than cores only adds
+    commit work; AQE does not coalesce a stateful shuffle the way it
+    does a batch one."""
+    return max(1, spark.sparkContext.defaultParallelism // STATEFUL_QUERIES)
 
 
 def run_reference_job(
@@ -35,13 +63,18 @@ def run_reference_job(
     checkpoint_root: str = "/tmp/spark_graft_checkpoints",
     trigger: dict | None = None,
 ) -> list:
-    """Start the two reference pipelines; returns the StreamingQueries.
+    """Start the two reference queries; returns ``[q1, q2]``.
 
     mode="kafka": source/alert-sink on the configured topics (cluster).
     mode="file": parquet-dir source + JSON-file alert sink (local,
     broker-less — the alert sink directory stands in for the topic).
+    Both queries run on ``trigger``; with none they drain what has
+    landed, then stop.
+
+    ``spark.sql.shuffle.partitions`` is set to ``state_partitions`` only
+    around the two ``start()`` calls: each query clones the session conf
+    when it starts, and the caller's value is restored afterwards.
     """
-    trigger = trigger or {"availableNow": True}
     if mode == "kafka":
         readings = read_kafka_json(
             spark,
@@ -52,42 +85,47 @@ def run_reference_job(
                 "startingOffsets": "earliest",
             },
         )
-
-        def q1_sink(df):
-            return write_kafka_json(
-                df,
-                sink_options(cfg.bootstrap_servers, cfg.output_topic),
-                checkpoint=os.path.join(checkpoint_root, "q1"),
-                key_col="sensor_id",
-            )
-
     else:
         readings = stream_parquet_dir(
             spark, source_dir, SENSOR_READING, max_files_per_trigger=1
         )
-
-        def q1_sink(df):
-            return (
-                df.writeStream.format("json")
-                .option("path", os.path.join(cfg.output_topic, ""))
-                .option(
-                    "checkpointLocation", os.path.join(checkpoint_root, "q1")
-                )
-                .outputMode("append")
-                .trigger(**trigger)
-                .start()
-            )
-
-    def q2_sink(df):
-        return write_partitioned_files(
-            df,
-            cfg.output_path,
-            checkpoint=os.path.join(checkpoint_root, "q2"),
-            fmt="json",
-            trigger=trigger,
+    alerts = q1_high_temp_alerts(readings, watermark=REFERENCE_WATERMARK)
+    averages = q2_windowed_avg(readings, watermark=REFERENCE_WATERMARK)
+    if mode == "kafka":
+        q1_writer = (
+            to_kafka_json(alerts, key_col="sensor_id")
+            .writeStream.format("kafka")
+            .options(**sink_options(cfg.bootstrap_servers, cfg.output_topic))
+        )
+    else:
+        q1_writer = alerts.writeStream.format("json").option(
+            "path", os.path.join(cfg.output_topic, "")
         )
 
-    return run_reference_pipelines(readings, q1_sink, q2_sink)
+    conf = spark.conf
+    key = "spark.sql.shuffle.partitions"
+    caller = conf.get(key, None)
+    conf.set(key, str(state_partitions(spark)))
+    try:
+        return [
+            start(
+                q1_writer.outputMode("append"),
+                os.path.join(checkpoint_root, "q1"),
+                trigger,
+            ),
+            write_partitioned_files(
+                averages,
+                cfg.output_path,
+                checkpoint=os.path.join(checkpoint_root, "q2"),
+                fmt="json",
+                trigger=trigger,
+            ),
+        ]
+    finally:
+        if caller is None:
+            conf.unset(key)
+        else:
+            conf.set(key, caller)
 
 
 def main() -> None:
@@ -107,6 +145,11 @@ def main() -> None:
         mode=args.mode,
         source_dir=args.source_dir,
         checkpoint_root=args.checkpoint_root,
+        # Kafka mode is a live job, both queries running until stopped
+        # (main.py:146-153); file mode drains the directory and stops.
+        trigger=(
+            {"processingTime": "0 seconds"} if args.mode == "kafka" else None
+        ),
     )
     for q in queries:
         q.awaitTermination()

@@ -1,7 +1,7 @@
 """Reference-surface queries (SURVEY §2.10), oracle-checked in batch.
 
 The streaming execution of the same transforms is covered by
-``streaming/pipelines.py`` + ``tests/test_streaming.py`` (watermarks and
+``jobs.py::run_reference_job`` + ``tests/test_streaming.py`` (watermarks and
 append-mode emission are not SQL-expressible for the DuckDB oracle).
 
 The reference's exact parameters (30s/60s windows over a 0.33 rec/s

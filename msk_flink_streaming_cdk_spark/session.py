@@ -11,7 +11,7 @@ The global ``spark.sql.shuffle.partitions`` default serves batch
 queries, whose shuffles AQE coalesces at runtime. Stateful streaming
 queries are not coalesced, so the reference job sizes their partitions
 when its queries start: one state store per core, split between its two
-concurrent queries (``streaming.pipelines.state_partitions``).
+concurrent queries (``jobs.state_partitions``).
 
 ``tune(spark)`` applies the runtime-settable subset to a session we did
 not create (the verify driver hands us one) — it is idempotent.
@@ -23,42 +23,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Conf that can be changed on a live session (dynamic SQL confs).
+# Conf that can be changed on a live session (dynamic SQL confs). Only
+# values that differ from Spark's defaults: tune() runs inside every
+# registered query, so restating a default here would silently undo a
+# caller's override of it.
 _RUNTIME_CONF = {
     # Naive timestamps must bind to UTC so window boundaries are
     # deterministic across environments (SURVEY §7 risk 3).
     "spark.sql.session.timeZone": "UTC",
-    # AQE: runtime partition coalescing, skew-join splitting, and
-    # dynamic join-strategy switch — essential at 100 TB where static
-    # estimates are wrong.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Broadcast decisions: keep the STATIC threshold at Spark's 10 MB
-    # default — static estimates are file-size × guessed selectivity
-    # and routinely wrong (a 50%-selective filter on a fact table can
-    # "fit" and then serially build a huge hash relation). AQE's
-    # runtime threshold works on EXACT post-shuffle sizes, so it can
-    # afford to be aggressive.
-    "spark.sql.autoBroadcastJoinThreshold": str(10 * 1024 * 1024),
+    # AQE (on by default) switches a join to broadcast on EXACT
+    # post-shuffle sizes, so its runtime threshold can afford to be
+    # more aggressive than the static 10 MB default, which works on
+    # file-size × guessed-selectivity estimates.
     "spark.sql.adaptive.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Arrow for any toPandas()/pandas_udf path (vectorized transfer).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Runtime bloom-filter join pruning: when one join side is
-    # selectively filtered, inject a bloom of its keys into the other
-    # side's scan — at 100 TB this prunes most of a fact-table shuffle
-    # before it happens (the built-in form of the bloom pattern
-    # text_contamination_bloom hand-builds for a non-join shape).
-    # Env-gated, DEFAULT ON (cluster posture): round-4 A/B showed the
-    # injected filters cost a uniform ~10%/query at local sf0.1 with
-    # no pruning benefit (every scan already fits in one wave), so
-    # bench.py runs with SPARK_GRAFT_RUNTIME_BLOOM=false; a 100 TB
-    # deployment leaves the default. The creation/application size
-    # thresholds (creationSideThreshold 10 MB, application scan-size
-    # 10 GB) are Spark's own size gate on top of this switch.
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": os.environ.get(
-        "SPARK_GRAFT_RUNTIME_BLOOM", "true"
-    ),
     # ANSI off: match Flink/DuckDB permissive casts in oracle queries.
     "spark.sql.ansi.enabled": "false",
     # The driver's events fixture stores TIMESTAMP(NANOS) parquet, which

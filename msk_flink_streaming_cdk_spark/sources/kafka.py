@@ -108,16 +108,3 @@ def to_kafka_json(df: DataFrame, key_col: str | None = None) -> DataFrame:
     if key_col is None:
         return df.select(value)
     return df.select(F.col(key_col).cast("string").alias("key"), value)
-
-
-def write_kafka_json(
-    df: DataFrame,
-    options: dict[str, str],
-    checkpoint: str,
-    key_col: str | None = None,
-):
-    """Start a streaming Kafka sink (returns the StreamingQuery)."""
-    writer = to_kafka_json(df, key_col).writeStream.format("kafka")
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    return writer.option("checkpointLocation", checkpoint).start()

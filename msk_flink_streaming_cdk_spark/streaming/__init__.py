@@ -1,11 +1,9 @@
-from .pipelines import run_reference_pipelines
 from .sinks import (
     foreach_batch_publisher,
     write_partitioned_files,
 )
 
 __all__ = [
-    "run_reference_pipelines",
     "foreach_batch_publisher",
     "write_partitioned_files",
 ]

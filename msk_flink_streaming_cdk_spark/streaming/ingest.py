@@ -20,8 +20,8 @@ oracle-checked batch operator:
   chunk ratio (``cdc_chunks``), and exact-substring contamination
   (``gram_position_classes`` — any verbatim min_len-char overlap).
 
-All seven start through ``_start``, the module's one ``foreachBatch``
-start path.
+All seven start their ``foreachBatch`` body through ``sinks.start``,
+the package's one streaming start path.
 
 Design: ``foreachBatch`` per-batch composition, NOT a stateful
 streaming operator. The corpus/labels are maintained TABLES (persisted
@@ -50,17 +50,7 @@ from ..operators.dedup import (
     incremental_near_dup,
     winnow_fingerprints,
 )
-
-
-def _start(stream: DataFrame, checkpoint: str, fn, trigger: dict | None):
-    """Start ``fn`` as the ``foreachBatch`` body of ``stream``; with no
-    ``trigger`` the query drains what has landed, then stops."""
-    return (
-        stream.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+from .sinks import start
 
 
 def _guard_index_restart(
@@ -151,7 +141,9 @@ def _admission_stream(
         )
         state[key] = fold(state[key], admitted).localCheckpoint(eager=True)
 
-    return _start(incoming, checkpoint, gate, trigger), state
+    return start(
+        incoming.writeStream.foreachBatch(gate), checkpoint, trigger
+    ), state
 
 
 def near_dup_admission_stream(
@@ -178,7 +170,7 @@ def near_dup_admission_stream(
             batch_id,
         )
 
-    return _start(incoming, checkpoint, gate, trigger)
+    return start(incoming.writeStream.foreachBatch(gate), checkpoint, trigger)
 
 
 def embedding_admission_stream(
@@ -213,7 +205,7 @@ def embedding_admission_stream(
             batch_id,
         )
 
-    return _start(incoming, checkpoint, gate, trigger)
+    return start(incoming.writeStream.foreachBatch(gate), checkpoint, trigger)
 
 
 def component_maintenance_stream(
@@ -256,7 +248,9 @@ def component_maintenance_stream(
         if on_update is not None:
             on_update(labels, batch_id)
 
-    return _start(edge_stream, checkpoint, fold, trigger), state
+    return start(
+        edge_stream.writeStream.foreachBatch(fold), checkpoint, trigger
+    ), state
 
 
 def knn_forget_stream(
@@ -324,7 +318,9 @@ def knn_forget_stream(
         if on_update is not None:
             on_update(new_graph, batch_id)
 
-    return _start(forget_stream, checkpoint, fold, trigger), state
+    return start(
+        forget_stream.writeStream.foreachBatch(fold), checkpoint, trigger
+    ), state
 
 
 def winnowing_admission_stream(

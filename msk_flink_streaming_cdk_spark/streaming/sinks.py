@@ -8,6 +8,9 @@ Parity targets:
 - Per-record external publisher (the reference's consumer Lambda →
   SNS, ``kfpLambdaConsumerSNS.py:12-23``) as a ``foreachBatch``
   adapter that publishes from executors, never the driver.
+
+Every checkpointed streaming query in the package starts through
+``start``.
 """
 
 from __future__ import annotations
@@ -16,6 +19,20 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+
+def start(
+    writer: DataStreamWriter, checkpoint: str, trigger: dict | None = None
+):
+    """Start ``writer`` on its ``checkpoint`` dir (returns the
+    StreamingQuery); with no ``trigger`` the query drains what has
+    landed, then stops."""
+    return (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
 
 
 def write_partitioned_files(
@@ -87,12 +104,10 @@ def write_partitioned_files(
                 )
                 out.close()
 
-    return (
-        df.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return start(
+        df.writeStream.foreachBatch(commit_batch).outputMode("append"),
+        checkpoint,
+        trigger,
     )
 
 
@@ -145,7 +160,6 @@ def upsert_latest_sink(
     from pyspark.sql import Window
     from pyspark.sql.utils import AnalysisException
 
-    trigger = trigger or {"availableNow": True}
     keys = list(key_cols)
 
     def latest_per_key(frame: DataFrame) -> DataFrame:
@@ -181,22 +195,20 @@ def upsert_latest_sink(
             .parquet(path)
         )
 
-    return (
-        df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .trigger(**trigger)
-        .start()
+    return start(
+        df.writeStream.foreachBatch(merge_batch).outputMode("update"),
+        checkpoint,
+        trigger,
     )
 
 
 def memory_sink(df: DataFrame, name: str, trigger: dict | None = None):
-    """Append-mode memory sink for deterministic streaming tests."""
-    trigger = trigger or {"availableNow": True}
+    """Append-mode memory sink for deterministic streaming tests (no
+    checkpoint: the memory sink cannot recover from one)."""
     return (
         df.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .trigger(**trigger)
+        .trigger(**(trigger or {"availableNow": True}))
         .start()
     )

@@ -11,8 +11,7 @@ _NON_QUERY_TOKENS = {
     # modules / functions / tests / misc backticked identifiers
     "msk_flink_streaming_cdk_spark", "queries", "oracle_sql",
     "source_options", "read_kafka_json", "to_kafka_json",
-    "write_kafka_json", "write_partitioned_files",
-    "foreach_batch_publisher", "run_reference_pipelines",
+    "write_partitioned_files", "foreach_batch_publisher",
     "ewma_by_key", "interval_join",
     "asof_join_backward", "simhash64", "extract_features",
     "_bucket_udf", "sessionize", "window_start", "session_window",

@@ -150,7 +150,7 @@ def test_reference_job_restart_keeps_checkpointed_state_partitions(spark, tmp_pa
     # A restart against an existing checkpoint with a different sizing
     # must give the one-shot output: Spark restores the state partition
     # count frozen in the checkpoint's offset log at first start.
-    from msk_flink_streaming_cdk_spark.streaming import pipelines
+    from msk_flink_streaming_cdk_spark import jobs
 
     batches = _sensor_batches(4)
     one_src = os.path.join(str(tmp_path), "one_src")
@@ -167,14 +167,71 @@ def test_reference_job_restart_keeps_checkpointed_state_partitions(spark, tmp_pa
         _props_file(tmp_path, str(tmp_path / "alerts"), str(tmp_path / "bucket"))
     )
     ckpt = os.path.join(str(tmp_path), "ckpt")
-    monkeypatch.setattr(pipelines, "state_partitions", lambda spark: 3)
+    monkeypatch.setattr(jobs, "state_partitions", lambda spark: 3)
     _write_source(spark, tmp_path, src, batches[:2])
     assert _state_partitions(_run_job(spark, cfg, src, ckpt)) == [3, 3]
 
-    monkeypatch.setattr(pipelines, "state_partitions", lambda spark: 5)
+    monkeypatch.setattr(jobs, "state_partitions", lambda spark: 5)
     _write_source(spark, tmp_path, src, batches[2:], first=2)
     assert _state_partitions(_run_job(spark, cfg, src, ckpt)) == [3, 3]
     assert _job_outputs(spark, cfg) == one_shot
+
+
+def test_main_runs_kafka_mode_live_and_file_mode_to_completion(tmp_path, monkeypatch):
+    # Kafka mode is a live job: both queries get the same trigger and run
+    # until stopped (main.py:146-153). File mode drains, then stops.
+    import sys
+
+    from msk_flink_streaming_cdk_spark import jobs
+
+    calls = []
+    monkeypatch.setattr(jobs, "get_spark", lambda **kw: None)
+    monkeypatch.setattr(jobs, "load_job_config", lambda path: None)
+    monkeypatch.setattr(
+        jobs, "run_reference_job", lambda *a, **kw: calls.append(kw) or []
+    )
+    props = _props_file(tmp_path, "/tmp/a", "/tmp/b")
+    for argv in (["--mode", "kafka"], ["--mode", "file", "--source-dir", "in"]):
+        monkeypatch.setattr(sys, "argv", ["jobs", "--properties", props, *argv])
+        jobs.main()
+    assert [c["mode"] for c in calls] == ["kafka", "file"]
+    assert calls[0]["trigger"] == {"processingTime": "0 seconds"}
+    assert calls[1]["trigger"] is None
+
+
+def test_reference_job_runs_both_queries_on_the_given_trigger(spark, tmp_path):
+    src = os.path.join(str(tmp_path), "src")
+    _write_source(spark, tmp_path, src, _sensor_batches(1))
+    cfg = load_job_config(
+        _props_file(tmp_path, str(tmp_path / "alerts"), str(tmp_path / "bucket"))
+    )
+    queries = run_reference_job(
+        spark,
+        cfg,
+        mode="file",
+        source_dir=src,
+        checkpoint_root=os.path.join(str(tmp_path), "ckpt"),
+        trigger={"processingTime": "1 second"},
+    )
+    try:
+        deadline = time.time() + 120
+        while any(q.lastProgress is None for q in queries):
+            assert time.time() < deadline, "no progress within 120 s"
+            assert all(q.exception() is None for q in queries)
+            time.sleep(0.2)
+        # Still running after their first batch: a live trigger keeps a
+        # query alive, where availableNow would have drained and ended.
+        assert [q.isActive for q in queries] == [True, True]
+        # Stop between batches: stopping inside a Python foreachBatch
+        # ends the stream thread with an error.
+        for q in queries:
+            q.processAllAvailable()
+        while any(q.status["isTriggerActive"] for q in queries):
+            time.sleep(0.1)
+    finally:
+        for q in queries:
+            q.stop()
+    assert all(q.exception() is None for q in queries)
 
 
 def test_cli_list_and_run(tmp_path, capsys, spark, sf_small):

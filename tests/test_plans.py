@@ -545,6 +545,19 @@ def test_registry_never_mutates_session_conf(spark, sf_small):
     assert after["spark.sql.cteRecursionRowLimit"] == "1000000000"
 
 
+def test_registered_query_keeps_callers_default_conf_override(spark, sf_small):
+    # tune() runs inside every registered query; it must not put back a
+    # Spark default the caller switched off (bench.py runs with the
+    # runtime bloom filter off).
+    key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
+    spark.conf.set(key, "false")
+    try:
+        QUERIES["q1_alerts_daily"](spark, sf_small)
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.unset(key)
+
+
 def test_mad_outlier_broadcasts_stats_and_no_nlj(spark, sf_small):
     # The per-source median/MAD stats frames are dimension-sized and
     # must broadcast back onto the doc scan; no nested loop anywhere.

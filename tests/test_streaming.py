@@ -14,15 +14,17 @@ import json
 import os
 import time
 from datetime import datetime, timedelta
+from functools import partial
 
 import pytest
 
+from msk_flink_streaming_cdk_spark.jobs import REFERENCE_WATERMARK
+from msk_flink_streaming_cdk_spark.operators.reference import (
+    q1_high_temp_alerts,
+    q2_windowed_avg,
+)
 from msk_flink_streaming_cdk_spark.schemas import SENSOR_READING
 from msk_flink_streaming_cdk_spark.sources.files import stream_parquet_dir
-from msk_flink_streaming_cdk_spark.streaming.pipelines import (
-    q1_stream,
-    q2_stream,
-)
 from msk_flink_streaming_cdk_spark.streaming.sinks import (
     foreach_batch_publisher,
     memory_sink,
@@ -30,6 +32,10 @@ from msk_flink_streaming_cdk_spark.streaming.sinks import (
 )
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
+
+# The reference job's two streaming transforms, as ``jobs`` builds them.
+q1_stream = partial(q1_high_temp_alerts, watermark=REFERENCE_WATERMARK)
+q2_stream = partial(q2_windowed_avg, watermark=REFERENCE_WATERMARK)
 
 
 def _write_batches(spark, tmpdir, batches):
@@ -300,38 +306,6 @@ def test_upsert_latest_sink_merges_and_is_idempotent(spark, tmp_path):
     )
     q2.awaitTermination(120)
     assert snapshot() == [("1", 35), ("2", 28), ("3", 31)]
-
-
-def test_observed_metrics_surface_in_progress(spark, tmp_path):
-    # df.observe metrics must appear in the streaming progress events
-    # for every micro-batch — the zero-cost telemetry channel (computed
-    # inside the plan; no second scan).
-    from msk_flink_streaming_cdk_spark.streaming.pipelines import (
-        with_observed_metrics,
-    )
-
-    batches = [
-        [("1", 30, 0), ("2", 28, 5)],
-        [("1", 35, 20)],
-    ]
-    src = _write_batches(spark, tmp_path, batches)
-    readings = stream_parquet_dir(
-        spark, src, SENSOR_READING, max_files_per_trigger=1
-    )
-    q = memory_sink(
-        with_observed_metrics(readings, "telemetry"), "observe_test"
-    )
-    q.awaitTermination(120)
-    counts = [
-        p["observedMetrics"]["telemetry"]["n_rows"]
-        for p in (q.recentProgress or [])
-        if p.get("observedMetrics", {}).get("telemetry")
-        and p["numInputRows"] > 0
-    ]
-    assert sorted(counts) == [1, 2], [
-        (p.get("numInputRows"), p.get("observedMetrics"))
-        for p in q.recentProgress
-    ]
 
 
 def test_streaming_observe_metrics_surface(spark, tmp_path):
