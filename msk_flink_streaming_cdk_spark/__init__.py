@@ -12,14 +12,17 @@ search, text analysis) — Spark-first: declarative DataFrame/SQL plans
 optimized by Catalyst, Structured Streaming for the streaming surface.
 
 Layout:
+    jobs.py       the reference job (Q1 + Q2 streaming queries), sized
+                  to the cores that run it
     session.py    SparkSession factory / session tuning for scale
     schemas.py    explicit StructTypes (reference DDL parity)
     sources/      fixture loader, Kafka/file/rate source builders
     operators/    batch+streaming transforms (shared, unified model)
     functions/    scalar/vector helper columns (JVM-side first)
     plans/        plan-inspection utilities (pushdown/broadcast asserts)
-    streaming/    sinks, multi-sink runner, foreachBatch adapters
-    registry.py   name -> (query builder, DuckDB oracle SQL) registry
+    streaming/    sinks and their one start path, ingest gates,
+                  stateful operators
+    registry/     name -> (query builder, DuckDB oracle SQL) registry
 """
 
 __version__ = "0.1.0"

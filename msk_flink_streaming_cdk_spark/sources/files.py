@@ -6,9 +6,11 @@ Spark file stream (parquet/json/csv) with an explicit schema — the
 idiomatic replacement being a parquet directory replayed in
 modification-time order.
 
-``maxFilesPerTrigger=1`` replays one fixture file per micro-batch so
-watermark progression (and late-row dropping) is observable and
-deterministic — SURVEY §5.2.
+Tests pin ``maxFilesPerTrigger=1``, one fixture file per micro-batch,
+so watermark progression (and late-row dropping) between files is
+observable and deterministic — SURVEY §5.2. The reference job sizes
+its triggers to its cores instead (``jobs.files_per_trigger``), so a
+backlog drains in ⌈files ÷ cores⌉ micro-batches.
 """
 
 from __future__ import annotations

@@ -139,7 +139,14 @@ def _admission_stream(
         admitted = feats.join(
             decisions.filter("admitted").select("doc_id"), "doc_id"
         )
-        state[key] = fold(state[key], admitted).localCheckpoint(eager=True)
+        # A union adds the admitted rows' partitions to the index's, so
+        # without the coalesce every batch would add one more task to
+        # each later probe; coalesce merges them without a shuffle.
+        state[key] = (
+            fold(state[key], admitted)
+            .coalesce(batch_df.sparkSession.sparkContext.defaultParallelism)
+            .localCheckpoint(eager=True)
+        )
 
     return start(
         incoming.writeStream.foreachBatch(gate), checkpoint, trigger

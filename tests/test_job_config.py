@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import time
 from datetime import datetime, timedelta
@@ -13,6 +14,7 @@ from msk_flink_streaming_cdk_spark.config import (
     ReferenceJobConfig,
     load_job_config,
 )
+from msk_flink_streaming_cdk_spark import jobs
 from msk_flink_streaming_cdk_spark.jobs import run_reference_job
 from msk_flink_streaming_cdk_spark.schemas import SENSOR_READING
 
@@ -95,9 +97,9 @@ def test_property_group_resolution(tmp_path):
 def test_reference_job_file_mode_end_to_end(spark, tmp_path):
     src = os.path.join(str(tmp_path), "src")
     os.makedirs(src)
-    # two files → two micro-batches, so the second advances the
-    # watermark past the first's windows (append-mode emission needs
-    # watermark progression between batches).
+    # One trigger takes both files; the closing no-data batch then
+    # advances the watermark past the windows (append-mode emission
+    # needs watermark progression between batches).
     batches = [
         [("1", 31, i) for i in range(0, 25, 5)] + [("1", 27, 40)],
         [("1", 27, 120)],
@@ -150,8 +152,6 @@ def test_reference_job_restart_keeps_checkpointed_state_partitions(spark, tmp_pa
     # A restart against an existing checkpoint with a different sizing
     # must give the one-shot output: Spark restores the state partition
     # count frozen in the checkpoint's offset log at first start.
-    from msk_flink_streaming_cdk_spark import jobs
-
     batches = _sensor_batches(4)
     one_src = os.path.join(str(tmp_path), "one_src")
     _write_source(spark, tmp_path, one_src, batches)
@@ -175,6 +175,113 @@ def test_reference_job_restart_keeps_checkpointed_state_partitions(spark, tmp_pa
     _write_source(spark, tmp_path, src, batches[2:], first=2)
     assert _state_partitions(_run_job(spark, cfg, src, ckpt)) == [3, 3]
     assert _job_outputs(spark, cfg) == one_shot
+
+
+def _data_batches(query):
+    return sum(1 for p in query.recentProgress if p["numInputRows"] > 0)
+
+
+def _dropped_late(query):
+    return sum(
+        op["numRowsDroppedByWatermark"]
+        for p in query.recentProgress
+        for op in p["stateOperators"]
+    )
+
+
+def test_reference_job_drains_one_file_per_core_per_trigger(spark, tmp_path, monkeypatch):
+    # A backlog of more files than cores drains in ⌈files ÷ cores⌉ data
+    # batches per query. Each file also carries rows up to 4 s older
+    # than the previous file's latest event, disorder inside the 5 s
+    # watermark, so the output equals a one-file-per-trigger replay.
+    cores = spark.sparkContext.defaultParallelism
+    n_files = 2 * cores + 1
+    batches = [
+        [(s, t, o - 4 if i and (o // 3) % 5 == 0 else o) for s, t, o in rows]
+        for i, rows in enumerate(_sensor_batches(n_files))
+    ]
+    src = os.path.join(str(tmp_path), "src")
+    _write_source(spark, tmp_path, src, batches)
+    cfg = load_job_config(
+        _props_file(tmp_path, str(tmp_path / "alerts"), str(tmp_path / "bucket"))
+    )
+    queries = _run_job(spark, cfg, src, os.path.join(str(tmp_path), "ckpt"))
+    assert [_data_batches(q) for q in queries] == [math.ceil(n_files / cores)] * 2
+    assert [_dropped_late(q) for q in queries] == [0, 0]
+
+    monkeypatch.setattr(jobs, "files_per_trigger", lambda spark: 1)
+    one_cfg = load_job_config(
+        _props_file(tmp_path, str(tmp_path / "one_alerts"), str(tmp_path / "one_bucket"))
+    )
+    one_file = _run_job(spark, one_cfg, src, os.path.join(str(tmp_path), "one_ckpt"))
+    assert [_data_batches(q) for q in one_file] == [n_files] * 2
+    one = _job_outputs(spark, one_cfg)
+    assert one[0] and one[1]
+    assert _job_outputs(spark, cfg) == one
+
+
+def test_reference_job_keeps_disorder_beyond_the_watermark_within_a_trigger(
+    spark, tmp_path, monkeypatch
+):
+    # Spark drops a row as late against the watermark the previous
+    # trigger ran with, so with disorder beyond the 5 s watermark the
+    # output depends on how many files share a trigger, that is on the
+    # cores running the job. Sensor 99's hot readings in [0, 30) land
+    # two files after one whose latest row is at 100 s: kept when the
+    # three files share a trigger, dropped when each file is its own
+    # trigger. Sensor 1 raises an alert either way.
+    on_time = [("1", 35, o) for o in range(60, 70, 2)] + [("1", 27, 100)]
+    late = [("99", 40, o) for o in range(0, 10, 2)]
+    batches = [on_time, [("1", 27, 110)], late + [("1", 27, 200)]]
+    src = os.path.join(str(tmp_path), "src")
+    _write_source(spark, tmp_path, src, batches)
+
+    def run(name, files):
+        monkeypatch.setattr(jobs, "files_per_trigger", lambda spark: files)
+        cfg = load_job_config(
+            _props_file(tmp_path, str(tmp_path / f"{name}_alerts"), str(tmp_path / f"{name}_bucket"))
+        )
+        queries = _run_job(spark, cfg, src, os.path.join(str(tmp_path), f"{name}_ckpt"))
+        assert [_data_batches(q) for q in queries] == [len(batches) // files] * 2
+        alerts, averages = _job_outputs(spark, cfg)
+        assert [r for r in alerts if "1" in r]
+        return (
+            [_dropped_late(q) for q in queries],
+            [r for r in alerts if "99" in r],
+            [r for r in averages if r[0] == "99"],
+        )
+
+    dropped, alerts, averages = run("shared", 3)
+    assert dropped == [0, 0]
+    assert len(alerts) == 1 and 5 in alerts[0]
+    assert len(averages) == 1 and averages[0][1] == 40.0
+
+    dropped, alerts, averages = run("one", 1)
+    assert all(n > 0 for n in dropped)
+    assert alerts == [] and averages == []
+
+
+def test_reference_job_drops_a_late_row_after_a_restart(spark, tmp_path):
+    # A row older than the watermark restored from the checkpoint,
+    # landing in a later run on the same checkpoint, is dropped: sensor
+    # 99's hot readings in [0, 30) would raise an alert and an average
+    # if they were kept.
+    src = os.path.join(str(tmp_path), "src")
+    _write_source(spark, tmp_path, src, _sensor_batches(2))
+    cfg = load_job_config(
+        _props_file(tmp_path, str(tmp_path / "alerts"), str(tmp_path / "bucket"))
+    )
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    _run_job(spark, cfg, src, ckpt)
+
+    late = [("99", 40, o) for o in range(0, 10, 2)]
+    _write_source(spark, tmp_path, src, [late + [("1", 27, 200)]], first=2)
+    queries = _run_job(spark, cfg, src, ckpt)
+    assert all(_dropped_late(q) > 0 for q in queries)
+    alerts, averages = _job_outputs(spark, cfg)
+    assert alerts and averages
+    assert not [r for r in alerts if "99" in r]
+    assert not [r for r in averages if r[0] == "99"]
 
 
 def test_main_runs_kafka_mode_live_and_file_mode_to_completion(tmp_path, monkeypatch):

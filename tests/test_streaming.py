@@ -661,15 +661,14 @@ def _py_winnow_fps(text):
     }
 
 
-def test_streaming_winnowing_admission_matches_sequential_fold(
-    spark, tmp_path, sf_small
-):
-    # The winnowing gate replayed over single-file micro-batches must
-    # equal a pure-Python sequential fold: per batch, probe each doc
-    # against the df-gated maintained index (>=3 shared fps on any
-    # corpus doc -> rejected, best match = max shared then min id),
-    # then fold the ADMITTED docs' fingerprints in. The reference
-    # shares no Spark code with the implementation.
+def _winnowing_replay(spark, tmp_path, sf_small, cuts):
+    """Replay the documents through the winnowing gate one file per
+    micro-batch, banded at the ``doc_id`` ``cuts``, and fold the same
+    bands in pure Python: per batch, probe each doc against the
+    df-gated maintained index (>=3 shared fps on any corpus doc ->
+    rejected, best match = max shared then min id), then fold the
+    ADMITTED docs' fingerprints in. The reference shares no Spark code
+    with the implementation. Returns ``(got, want, state, corpus)``."""
     import glob
     import os
     import time as _t
@@ -686,10 +685,15 @@ def test_streaming_winnowing_admission_matches_sequential_fold(
     ).select("doc_id", "text")
     src = str(tmp_path / "win_in")
     os.makedirs(src)
-    bands = ("doc_id < 150", "doc_id >= 150 and doc_id < 300", "doc_id >= 300")
-    for i, pred in enumerate(bands):
+    bounds = list(zip([None, *cuts], [*cuts, None]))
+    for i, (lo, hi) in enumerate(bounds):
+        band = docs
+        if lo is not None:
+            band = band.filter(docs.doc_id >= lo)
+        if hi is not None:
+            band = band.filter(docs.doc_id < hi)
         part = str(tmp_path / f"wpart{i}")
-        docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(part)
+        band.coalesce(1).write.mode("overwrite").parquet(part)
         (f,) = glob.glob(os.path.join(part, "*.parquet"))
         dst = os.path.join(src, f"batch_{i}.parquet")
         os.rename(f, dst)
@@ -710,14 +714,17 @@ def test_streaming_winnowing_admission_matches_sequential_fold(
     )
     q.awaitTermination()
 
-    # Pure-Python sequential fold over the same 3 bands in order.
+    # Pure-Python sequential fold over the same bands in order.
     rows = sorted(
         ((r.doc_id, r.text) for r in docs.collect()), key=lambda t: t[0]
     )
     batches = [
-        [t for t in rows if t[0] < 150],
-        [t for t in rows if 150 <= t[0] < 300],
-        [t for t in rows if t[0] >= 300],
+        [
+            t
+            for t in rows
+            if (lo is None or t[0] >= lo) and (hi is None or t[0] < hi)
+        ]
+        for lo, hi in bounds
     ]
     corpus = {}  # doc_id -> fps set
     want = {}
@@ -745,6 +752,17 @@ def test_streaming_winnowing_admission_matches_sequential_fold(
         for doc_id, fps, admitted in decided:
             if admitted and fps:
                 corpus[doc_id] = fps
+    return got, want, state, corpus
+
+
+def test_streaming_winnowing_admission_matches_sequential_fold(
+    spark, tmp_path, sf_small
+):
+    # The winnowing gate replayed over single-file micro-batches must
+    # equal a pure-Python sequential fold.
+    got, want, state, corpus = _winnowing_replay(
+        spark, tmp_path, sf_small, (150, 300)
+    )
     assert got == want
     n_rej = sum(1 for v in want.values() if not v[2])
     assert n_rej >= 3, f"fixture must produce rejections, got {n_rej}"
@@ -756,6 +774,25 @@ def test_streaming_winnowing_admission_matches_sequential_fold(
         (d, h) for d, s in corpus.items() for h in s
     }
     assert idx == want_idx
+
+
+def test_winnowing_admission_index_partitions_stay_bounded(
+    spark, tmp_path, sf_small
+):
+    # Each fold unions the admitted rows into the index; over more
+    # batches than cores the index must stay at most one partition per
+    # core (else every later probe runs one task per past batch), with
+    # decisions and index still equal to the sequential fold.
+    cores = spark.sparkContext.defaultParallelism
+    n = cores + 2
+    got, want, state, corpus = _winnowing_replay(
+        spark, tmp_path, sf_small, [500 * i // n for i in range(1, n)]
+    )
+    assert state["fps"].rdd.getNumPartitions() <= cores
+    assert got == want
+    assert {(r.doc_id, r.h) for r in state["fps"].collect()} == {
+        (d, h) for d, s in corpus.items() for h in s
+    }
 
 
 def test_streaming_cdc_chunk_dedup_matches_sequential_fold(
