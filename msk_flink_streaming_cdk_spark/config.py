@@ -46,17 +46,12 @@ class ReferenceJobConfig:
     ) -> "ReferenceJobConfig":
         producer = groups[PRODUCER_GROUP]
         consumer = groups[CONSUMER_GROUP]
-        # The reference reads 'output.s3.bucket' (main.py:124; the CDK
-        # stack writes that key). 'output.bucket.name' is kept as a
-        # fallback for our earlier property files.
-        bucket = consumer.get("output.s3.bucket") or consumer[
-            "output.bucket.name"
-        ]
         return cls(
             input_topic=producer["input.topic.name"],
             bootstrap_servers=producer["bootstrap.servers"],
             output_topic=consumer["output.topic.name"],
-            output_path=bucket,
+            # main.py:124; the CDK stack writes this key.
+            output_path=consumer["output.s3.bucket"],
         )
 
 

@@ -157,7 +157,6 @@ def run_reference_job(
                 averages,
                 cfg.output_path,
                 checkpoint=os.path.join(checkpoint_root, "q2"),
-                fmt="json",
                 trigger=trigger,
             ),
         ]

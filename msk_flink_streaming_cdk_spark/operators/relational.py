@@ -537,12 +537,3 @@ def time_range_join_count(
         *[c for c in left.columns],
         F.coalesce(F.col(count_alias), F.lit(0)).alias(count_alias),
     )
-
-
-def dedup_keep_first(
-    df: DataFrame, key_cols: list[str], order_cols: list[Column]
-) -> DataFrame:
-    """Keep one deterministic row per key (min by order_cols) — exact
-    dedup primitive. One shuffle on the key; partial aggregation
-    (max_by/min_by) combines map-side, unlike a window+filter."""
-    return top_k_per_group(df, key_cols, order_cols, k=1)

@@ -165,16 +165,6 @@ def rolling_hash_from_words(wh: Column, window: int = 8) -> Column:
     ).otherwise(F.array(fold(wh)))
 
 
-def rolling_hash_col(text: Column, window: int = 8) -> Column:
-    """Per-document rolling (Rabin-Karp) window fingerprints over
-    words — content-defined chunk keys for shift-robust
-    fingerprinting; composition of ``word_hashes_col`` +
-    ``rolling_hash_from_words``. Prefer the two-stage form across a
-    projection boundary (see ``word_hashes_col``) so word hashing
-    runs once per document."""
-    return rolling_hash_from_words(word_hashes_col(text), window=window)
-
-
 # ---------------------------------------------------------------------------
 # HTML main-content extraction (round-15, VERDICT r14 #8)
 # ---------------------------------------------------------------------------

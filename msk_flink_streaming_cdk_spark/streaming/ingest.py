@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     cdc_chunks,
-    connected_components,
     gram_position_classes,
     incremental_connected_components,
     incremental_near_dup,
@@ -91,8 +90,20 @@ def _guard_index_restart(
         )
 
 
-def _union(index: DataFrame | None, admitted: DataFrame) -> DataFrame:
-    return admitted if index is None else index.unionByName(admitted)
+def _initial_index(
+    initial: DataFrame | None,
+    incoming: DataFrame,
+    empty_index: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The caller's ``initial`` index, or ``empty_index`` over an empty
+    batch of the stream cut to ``limit(0)``: an empty frame with the
+    index's schema, which the optimizer knows is empty. The first batch
+    then probes and folds through the same plan as every later one, and
+    the optimizer folds the empty side of its joins and union away."""
+    if initial is not None:
+        return initial
+    spark = incoming.sparkSession
+    return empty_index(spark.createDataFrame([], incoming.schema)).limit(0)
 
 
 def _admission_stream(
@@ -103,14 +114,14 @@ def _admission_stream(
     key: str,
     trigger: dict | None,
     featurize: Callable[[DataFrame], DataFrame],
-    decide: Callable[[DataFrame, DataFrame, DataFrame | None], DataFrame],
-    fold: Callable[[DataFrame | None, DataFrame], DataFrame] = _union,
+    decide: Callable[[DataFrame, DataFrame, DataFrame], DataFrame],
+    fold: Callable[[DataFrame, DataFrame], DataFrame] = DataFrame.unionByName,
 ):
     """The admission-gate skeleton: per micro-batch, ``featurize`` the
     documents, ``decide(ids, features, index)`` each distinct
-    ``doc_id`` against the maintained index (``None`` until the first
-    batch folds in, unless ``initial`` seeds it), hand the decisions
-    to ``on_batch(decisions, batch_id)``, then ``fold`` the ADMITTED
+    ``doc_id`` against the maintained index (``initial``, or an empty
+    frame with the features' schema), hand the decisions to
+    ``on_batch(decisions, batch_id)``, then ``fold`` the ADMITTED
     docs' features into the index. Returns ``(query, state)`` with
     the index at ``state[key]``; ``decide`` must emit a boolean
     ``admitted`` column.
@@ -129,7 +140,7 @@ def _admission_stream(
     batch-fold replay the tests pin.
     """
     _guard_index_restart(incoming, checkpoint, initial, f"initial_{key}")
-    state: dict = {key: initial}
+    state: dict = {key: _initial_index(initial, incoming, featurize)}
 
     def gate(batch_df: DataFrame, batch_id: int) -> None:
         ids = batch_df.select("doc_id").distinct()
@@ -240,17 +251,18 @@ def component_maintenance_stream(
     _guard_index_restart(
         edge_stream, checkpoint, initial_labels, "initial_labels"
     )
-    state: dict = {"labels": initial_labels}
+    state: dict = {
+        "labels": _initial_index(
+            initial_labels,
+            edge_stream,
+            lambda e: e.select(F.col(a).alias("node"), F.col(a).alias("label")),
+        )
+    }
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        edges = batch_df.select(a, b)
-        if state["labels"] is None:
-            labels = connected_components(edges, a=a, b=b)
-        else:
-            labels = incremental_connected_components(
-                state["labels"], edges, a=a, b=b
-            )
-        labels = labels.localCheckpoint(eager=True)
+        labels = incremental_connected_components(
+            state["labels"], batch_df.select(a, b), a=a, b=b
+        ).localCheckpoint(eager=True)
         state["labels"] = labels
         if on_update is not None:
             on_update(labels, batch_id)
@@ -368,13 +380,6 @@ def winnowing_admission_stream(
     """
 
     def decide(ids, bfps, corpus):
-        if corpus is None:
-            return ids.select(
-                "doc_id",
-                F.lit(None).cast("long").alias("matched_doc"),
-                F.lit(None).cast("long").alias("shared_fps"),
-                F.lit(True).alias("admitted"),
-            )
         keep = (
             corpus.groupBy("h")
             .agg(F.countDistinct("doc_id").alias("df"))
@@ -447,25 +452,15 @@ def cdc_chunk_dedup_stream(
         )
 
     def decide(ids, ch, index):
-        if index is None:
-            per_doc = ch.groupBy("doc_id").agg(
-                F.count(F.lit(1)).cast("long").alias("n_chunks"),
-                F.lit(0).cast("long").alias("n_dup"),
-            )
-        else:
-            hit = ch.join(
-                index.select("chunk_md5").distinct(),
-                "chunk_md5",
-                "left_semi",
-            ).groupBy("doc_id").agg(
-                F.count(F.lit(1)).cast("long").alias("n_dup")
-            )
-            per_doc = (
-                ch.groupBy("doc_id")
-                .agg(F.count(F.lit(1)).cast("long").alias("n_chunks"))
-                .join(hit, "doc_id", "left")
-                .withColumn("n_dup", F.coalesce("n_dup", F.lit(0)))
-            )
+        hit = ch.join(
+            index.select("chunk_md5").distinct(), "chunk_md5", "left_semi"
+        ).groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("n_dup"))
+        per_doc = (
+            ch.groupBy("doc_id")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_chunks"))
+            .join(hit, "doc_id", "left")
+            .withColumn("n_dup", F.coalesce("n_dup", F.lit(0)))
+        )
         return (
             ids.join(per_doc, "doc_id", "left")
             .select(
@@ -531,13 +526,6 @@ def substring_contamination_stream(
     T = int(min_len)
 
     def decide(ids, g, index):
-        if index is None:
-            return ids.select(
-                "doc_id",
-                F.lit(0).cast("long").alias("n_spans"),
-                F.lit(0).cast("long").alias("max_span_len"),
-                F.lit(True).alias("admitted"),
-            )
         hits = g.join(index, ["h1", "h2"], "left_semi")
         w = Window.partitionBy("doc_id").orderBy("p")
         isl = hits.withColumn("grp", F.col("p") - F.row_number().over(w))
@@ -558,8 +546,9 @@ def substring_contamination_stream(
         )
 
     def fold(index, admitted):
-        adm = admitted.select("h1", "h2").distinct()
-        return adm if index is None else index.unionByName(adm).distinct()
+        # The empty index carries every feature column; keep the keys.
+        keys = ["h1", "h2"]
+        return index.select(keys).unionByName(admitted.select(keys)).distinct()
 
     return _admission_stream(
         incoming, checkpoint, on_batch, initial_index, "index", trigger,

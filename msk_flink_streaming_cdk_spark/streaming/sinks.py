@@ -35,21 +35,23 @@ def start(
     )
 
 
+PARTITION_COLS = ("year", "month", "day", "hour")
+
+
 def write_partitioned_files(
     df: DataFrame,
     path: str,
     checkpoint: str,
-    fmt: str = "json",
-    partition_cols: tuple[str, ...] = ("year", "month", "day", "hour"),
     trigger: dict | None = None,
 ):
     """Start a partitioned file sink (returns StreamingQuery).
 
-    A ``foreachBatch`` writer appends each micro-batch under Hive-style
-    partition dirs and then marks each touched partition with a
-    ``_SUCCESS`` file — the reference's partition-commit policy
-    (main.py:74-75). The touched partition tuples come from the write's
-    own ``Observation`` (a ``collect_set`` evaluated inside the write
+    A ``foreachBatch`` writer appends each micro-batch as JSON under
+    Hive-style ``year/month/day/hour`` partition dirs and then marks
+    each touched partition with a ``_SUCCESS`` file — the reference's
+    sink shape and partition-commit policy (main.py:59-76). The
+    touched partition tuples come from the write's own
+    ``Observation`` (a ``collect_set`` evaluated inside the write
     job), so each batch runs its plan once: no second pass over the
     batch, and, for a stateful upstream, no second load and commit of
     its state stores. The list is tiny (distinct partition tuples, not
@@ -74,15 +76,15 @@ def write_partitioned_files(
         # and commit in it) runs once.
         touched = Observation()
         observed = batch_df.observe(
-            touched, F.collect_set(F.struct(*partition_cols)).alias("parts")
+            touched, F.collect_set(F.struct(*PARTITION_COLS)).alias("parts")
         )
         # Cluster rows by partition key before the write: without this
         # every shuffle partition emits a file into every partition dir
         # (tiny-files explosion at scale — observed 19 files for 200
         # rows). One shuffle, ~one file per partition dir per batch.
-        observed.repartition(*[observed[c] for c in partition_cols]).write.mode(
-            "append"
-        ).partitionBy(*partition_cols).format(fmt).save(path)
+        observed.repartition(*PARTITION_COLS).write.mode("append").partitionBy(
+            *PARTITION_COLS
+        ).json(path)
         parts = touched.get["parts"]
         # Markers go through the Hadoop FileSystem API so the sink
         # works on any supported scheme (s3a://, hdfs://, file:/) —
@@ -93,7 +95,7 @@ def write_partitioned_files(
         hconf = spark._jsc.hadoopConfiguration()
         for row in parts:
             part_dir = "/".join(
-                [path.rstrip("/")] + [f"{c}={row[c]}" for c in partition_cols]
+                [path.rstrip("/")] + [f"{c}={row[c]}" for c in PARTITION_COLS]
             )
             p = jvm.org.apache.hadoop.fs.Path(part_dir)
             fs = p.getFileSystem(hconf)

@@ -21,10 +21,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 def _fold_ordered(
     pdfs: Iterator[pd.DataFrame], by: str
@@ -102,89 +98,17 @@ def ewma_by_key(readings: DataFrame, alpha: float = 0.3) -> DataFrame:
     )
 
 
-def tws_available() -> bool:
-    """True when ``transformWithStateInPandas`` can actually run: its
-    JVM-side driver worker imports ``google.protobuf`` (state-server
-    protocol), which some minimal environments lack. The operator
-    below is complete and API-correct either way; the replay test
-    skips with this probe when the dependency is absent."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-RUNNING_STATS_SCHEMA = (
-    "sensor_id string, n_events long, sum_temp double, max_temp double"
-)
-
-
-class RunningStatsProcessor(StatefulProcessor):
-    """Per-key running (count, sum, max) via the Spark 4
-    ``transformWithState`` API — ValueState holds one tuple per key;
-    every micro-batch folds its Arrow batches into the state and emits
-    the updated row (outputMode 'update').
-
-    Next to ``ewma_by_key``'s ``applyInPandasWithState`` this covers
-    the NEW stateful API: typed state handles (value/list/map state,
-    timers, TTL) instead of one opaque state tuple — the direction
-    Structured Streaming is consolidating on. State is keyed and
-    store-backed, so it scales exactly like the key-hash shuffle."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._stats = handle.getValueState(
-            "stats", "n long, s double, mx double"
-        )
-
-    def handleInputRows(self, key, rows, timer_values):
-        n, s, mx = (
-            self._stats.get() if self._stats.exists() else (0, 0.0, None)
-        )
-        for pdf in rows:
-            temps = pdf["temperature"].astype(float)
-            n += len(temps)
-            s += float(temps.sum())
-            batch_max = float(temps.max()) if len(temps) else None
-            if batch_max is not None:
-                mx = batch_max if mx is None else max(mx, batch_max)
-        self._stats.update((n, s, mx))
-        yield pd.DataFrame(
-            {
-                "sensor_id": [key[0]],
-                "n_events": [n],
-                "sum_temp": [s],
-                "max_temp": [mx],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
 def running_stats_by_key(readings: DataFrame) -> DataFrame:
-    """Per-sensor running stats through ``transformWithStateInPandas``
-    (requires the RocksDB state store provider on the session; see
-    ``tws_available`` for the protobuf runtime requirement)."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    out = StructType(
-        [
-            StructField("sensor_id", StringType()),
-            StructField("n_events", LongType()),
-            StructField("sum_temp", DoubleType()),
-            StructField("max_temp", DoubleType()),
-        ]
-    )
-    return readings.groupBy("sensor_id").transformWithStateInPandas(
-        RunningStatsProcessor(), out, "Update", "ProcessingTime"
+    """Per-sensor running (count, sum, max) of ``temperature``: Spark's
+    built-in streaming aggregation, whose state store carries the
+    running values across micro-batches. Run it in ``update`` output
+    mode to emit each touched sensor's new totals per batch. Returns
+    (sensor_id, n_events long, sum_temp double, max_temp double)."""
+    temp = F.col("temperature").cast("double")
+    return readings.groupBy("sensor_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum(temp).alias("sum_temp"),
+        F.max(temp).alias("max_temp"),
     )
 
 

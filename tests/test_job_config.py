@@ -10,6 +10,8 @@ import os
 import time
 from datetime import datetime, timedelta
 
+import pytest
+
 from msk_flink_streaming_cdk_spark.config import (
     ReferenceJobConfig,
     load_job_config,
@@ -175,6 +177,53 @@ def test_reference_job_restart_keeps_checkpointed_state_partitions(spark, tmp_pa
     _write_source(spark, tmp_path, src, batches[2:], first=2)
     assert _state_partitions(_run_job(spark, cfg, src, ckpt)) == [3, 3]
     assert _job_outputs(spark, cfg) == one_shot
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "q1",
+        pytest.param(
+            "q2",
+            marks=pytest.mark.xfail(
+                strict=True,
+                reason="ROADMAP direction 1: write_partitioned_files "
+                "appends a replayed batch a second time",
+            ),
+        ),
+    ],
+)
+def test_reference_job_replayed_batch_matches_one_shot(spark, tmp_path, query):
+    # A crash after a batch's write and before its commit-log entry
+    # replays the batch on restart; the output must equal a one-shot
+    # run. The last file's reading at 1000 s moves the watermark past
+    # every earlier window, so the replayed closing batch emits the
+    # windows starting at 120 s in both queries.
+    batches = _sensor_batches(3) + [[("1", 27, 1000)]]
+    src = os.path.join(str(tmp_path), "src")
+    _write_source(spark, tmp_path, src, batches)
+    one_cfg = load_job_config(
+        _props_file(tmp_path, str(tmp_path / "one_alerts"), str(tmp_path / "one_bucket"))
+    )
+    _run_job(spark, one_cfg, src, os.path.join(str(tmp_path), "one_ckpt"))
+    one_shot = _job_outputs(spark, one_cfg)
+    closing = "2024-01-01T00:02:00.000Z"  # T0 + 120 s, as the JSON holds it
+    assert [r for r in one_shot[0] if closing in r]
+    assert [r for r in one_shot[1] if closing in r]
+
+    cfg = load_job_config(
+        _props_file(tmp_path, str(tmp_path / "alerts"), str(tmp_path / "bucket"))
+    )
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    _run_job(spark, cfg, src, ckpt)
+    commits = os.path.join(ckpt, query, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for name in (last, f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    _run_job(spark, cfg, src, ckpt)
+    which = ["q1", "q2"].index(query)
+    assert _job_outputs(spark, cfg)[which] == one_shot[which]
 
 
 def _data_batches(query):

@@ -325,22 +325,11 @@ def test_stream_static_enrichment_broadcasts_dim(spark, tmp_path):
 
 
 def test_transform_with_state_running_stats(spark, tmp_path):
-    # Spark 4 transformWithState API: ValueState-backed per-key running
-    # (count, sum, max), state surviving across micro-batches. The TWS
-    # driver worker needs google.protobuf at runtime — skip (with the
-    # capability probe, not a silent pass) where it's absent.
-    import pytest
-
+    # Per-key running (count, sum, max), state surviving across
+    # micro-batches.
     from msk_flink_streaming_cdk_spark.streaming.stateful import (
         running_stats_by_key,
-        tws_available,
     )
-
-    if not tws_available():
-        pytest.skip(
-            "transformWithStateInPandas driver worker requires the "
-            "google.protobuf package, absent from this environment"
-        )
 
     batches = [
         [("1", 30, 0), ("1", 32, 10), ("2", 28, 5)],

@@ -175,9 +175,7 @@ def test_partitioned_file_sink_layout_and_success_files(spark, tmp_path):
     )
     out_dir = os.path.join(str(tmp_path), "s3_sink")
     ckpt = os.path.join(str(tmp_path), "ckpt_sink")
-    q = write_partitioned_files(
-        q2_stream(readings), out_dir, ckpt, fmt="json"
-    )
+    q = write_partitioned_files(q2_stream(readings), out_dir, ckpt)
     q.awaitTermination(120)
     part_dir = os.path.join(out_dir, "year=2024", "month=1", "day=1", "hour=0")
     assert os.path.isdir(part_dir), os.listdir(out_dir)
