@@ -615,6 +615,11 @@ def main() -> None:
     full["provenance"] = os.environ.get(
         "SPARK_GRAFT_BENCH_PROVENANCE", "external"
     )
+    # The task slots this run had and the host's core count, so two
+    # records taken at different core counts are told apart from the
+    # record alone.
+    full["task_slots"] = cpus
+    full["cpu_count"] = os.cpu_count()
     if prev_n is not None:
         # carried so same-round reruns keep the FULL prev baseline
         # (see _prev_round_queries).
@@ -649,6 +654,8 @@ def main() -> None:
                             old.get("burst_retries", {}).values()
                         ),
                         "provenance": old.get("provenance"),
+                        "task_slots": old.get("task_slots"),
+                        "cpu_count": old.get("cpu_count"),
                         # Per-query timings for EVERY considered run
                         # (VERDICT r13 #2): cross-run per-query noise
                         # is quantifiable from the committed artifact

@@ -107,22 +107,16 @@ def upsert_partition_overwrite(
     nothing else — re-running the same batch converges to the same
     state, so a retried job is safe.
 
-    Uses the session-scoped ``partitionOverwriteMode=dynamic`` conf
-    (restored afterward) rather than a global default, so callers'
-    overwrite semantics elsewhere are unaffected."""
-    spark = updates.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        (
-            updates.write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .format(fmt)
-            .save(path)
-        )
-    finally:
-        spark.conf.set(key, prev)
+    The per-write ``partitionOverwriteMode`` option sets dynamic mode
+    for this write alone; the session conf is never touched, so a
+    concurrent overwrite on the same session keeps its own mode."""
+    (
+        updates.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .format(fmt)
+        .save(path)
+    )
 
 
 def write_zordered(

@@ -22,6 +22,14 @@ def test_query_matches_oracle_sf0001(spark, sf_small, name):
     compare(QUERIES[name](spark, sf_small), ORACLES[name], sf_small)
 
 
+@pytest.fixture(scope="module")
+def built_queries(spark, sf_small):
+    """Every registered query built once at sf0.001. Building the
+    whole registry is most of the cost of the two lints that read it,
+    so they share one build."""
+    return {name: fn(spark, sf_small) for name, fn in QUERIES.items()}
+
+
 def test_no_oracle_returns_hugeint(sf_small):
     """Lint: no oracle may type a column HUGEINT (DuckDB int128).
 
@@ -55,7 +63,7 @@ def test_no_oracle_returns_hugeint(sf_small):
         con.close()
 
 
-def test_no_query_surfaces_decimal(spark, sf_small):
+def test_no_query_surfaces_decimal(built_queries, sf_small):
     """Lint: no registered query may OUTPUT a DecimalType column.
 
     Spark collects DecimalType as `decimal.Decimal` objects (pandas
@@ -76,8 +84,7 @@ def test_no_query_surfaces_decimal(spark, sf_small):
     from msk_flink_streaming_cdk_spark.sources.fixtures import TABLES
 
     offenders = []
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_small)
+    for name, df in built_queries.items():
         for f in df.schema.fields:
             if isinstance(f.dataType, DecimalType):
                 offenders.append(f"spark:{name}.{f.name}: {f.dataType}")
@@ -98,9 +105,8 @@ def test_no_query_surfaces_decimal(spark, sf_small):
     assert not offenders, offenders
 
 
-def test_every_query_runs_rows_nonnegative(spark, sf_small):
-    for name, fn in QUERIES.items():
-        df = fn(spark, sf_small)
+def test_every_query_runs_rows_nonnegative(built_queries):
+    for name, df in built_queries.items():
         assert df.count() >= 0, name
 
 

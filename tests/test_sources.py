@@ -290,91 +290,6 @@ def test_csv_file_stream_replay(spark, tmp_path):
     assert {r.event_type for r in rows} == {"click", "view"}
 
 
-def test_python_datasource_sensor_gen(spark):
-    # Spark 4 Python DataSource API: the reference producer shape as a
-    # registered format — partition-parallel, seed-deterministic, and
-    # per-row addressable (values re-derivable without Spark).
-    from msk_flink_streaming_cdk_spark.sources.pydatasource import (
-        SensorGenDataSource,
-        sensor_row,
-    )
-
-    spark.dataSource.register(SensorGenDataSource)
-    df = (
-        spark.read.format("sensor_gen")
-        .option("n", 99)
-        .option("seed", 7)
-        .option("numPartitions", 4)
-        .load()
-    )
-    rows = df.orderBy("event_time").collect()
-    assert len(rows) == 99
-    assert df.rdd.getNumPartitions() == 4
-    assert {r.sensor_id for r in rows} <= {"1", "2", "3", "4", "5"}
-    assert all(27 <= r.temperature <= 32 for r in rows)
-    # exact value parity with the local per-row derivation
-    for i in (0, 50, 98):
-        sid, temp, ts = sensor_row(7, i)
-        assert (rows[i].sensor_id, rows[i].temperature, rows[i].event_time) \
-            == (sid, temp, ts)
-    # determinism: a second read yields identical rows
-    again = (
-        spark.read.format("sensor_gen")
-        .option("n", 99)
-        .option("seed", 7)
-        .option("numPartitions", 2)  # partitioning must not change data
-        .load()
-        .orderBy("event_time")
-        .collect()
-    )
-    assert rows == again
-
-
-def test_python_datasource_streaming_offsets(spark, tmp_path):
-    # Streaming side of the custom source: offsets are row indices, so
-    # the delivered stream must be an exact, gapless, duplicate-free
-    # prefix of the deterministic row sequence (exactly-once).
-    import time
-
-    from msk_flink_streaming_cdk_spark.sources.pydatasource import (
-        SensorGenDataSource,
-        sensor_row,
-    )
-
-    spark.dataSource.register(SensorGenDataSource)
-    df = (
-        spark.readStream.format("sensor_gen")
-        .option("seed", 11)
-        .option("rowsPerBatch", 20)
-        .load()
-    )
-    q = (
-        df.writeStream.format("memory")
-        .queryName("pyds_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        n = 0
-        while time.time() < deadline and n < 40:  # >= 2 micro-batches
-            n = spark.sql("SELECT count(*) FROM pyds_stream").first()[0]
-            time.sleep(1)
-    finally:
-        q.stop()
-    rows = (
-        spark.sql("SELECT * FROM pyds_stream")
-        .orderBy("event_time")
-        .collect()
-    )
-    assert len(rows) >= 40
-    assert len(rows) % 20 == 0  # whole batches only
-    for i, r in enumerate(rows):
-        sid, temp, ts = sensor_row(11, i)
-        assert (r.sensor_id, r.temperature, r.event_time) == (sid, temp, ts)
-
-
 def test_binary_file_source_reads_media_payloads(spark, tmp_path):
     # format("binaryFile") is the image/audio corpus ingest path: one
     # row per file with (path, modificationTime, length, content).
@@ -420,155 +335,3 @@ def test_text_file_source_line_corpus(spark, tmp_path):
     whole = spark.read.text(str(src), wholetext=True)
     docs = sorted(r.value for r in whole.collect())
     assert docs == ["line one\nline two\n", "only line\n"]
-
-
-def test_record_publish_batch_writer_exactly_once(spark, tmp_path):
-    # Stage-then-commit: every input row appears exactly once in the
-    # visible directory, and no staged partials remain after commit.
-    import glob
-    import json
-    import os
-
-    from msk_flink_streaming_cdk_spark.sources.pydatasource import (
-        RecordPublishDataSource,
-        SensorGenDataSource,
-    )
-
-    spark.dataSource.register(SensorGenDataSource)
-    spark.dataSource.register(RecordPublishDataSource)
-    df = (
-        spark.read.format("sensor_gen")
-        .option("n", 99)
-        .option("numPartitions", 4)
-        .load()
-    )
-    out = str(tmp_path / "published")
-    df.write.format("record_publish").mode("append").option(
-        "path", out
-    ).save()
-    rows = []
-    for f in glob.glob(os.path.join(out, "part-*.jsonl")):
-        with open(f) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert len(rows) == 99
-    assert {r["sensor_id"] for r in rows} <= {"1", "2", "3", "4", "5"}
-    staged = glob.glob(os.path.join(out, "_staging", "*"))
-    assert staged == []
-
-
-def test_record_publish_stream_writer_epochs(spark, tmp_path):
-    import glob
-    import json
-    import os
-
-    from msk_flink_streaming_cdk_spark.sources.pydatasource import (
-        RecordPublishDataSource,
-        SensorGenDataSource,
-    )
-
-    spark.dataSource.register(SensorGenDataSource)
-    spark.dataSource.register(RecordPublishDataSource)
-    out = str(tmp_path / "published_stream")
-    stream = (
-        spark.readStream.format("sensor_gen")
-        .option("rowsPerBatch", 10)
-        .load()
-    )
-    q = (
-        stream.writeStream.format("record_publish")
-        .option("path", out)
-        .option(
-            "checkpointLocation", str(tmp_path / "ckpt_record_publish")
-        )
-        .trigger(processingTime="0 seconds")
-        .start()
-    )
-    try:
-        import time as _t
-
-        deadline = _t.time() + 60
-        files = []
-        while _t.time() < deadline:
-            files = glob.glob(os.path.join(out, "epoch-*.jsonl"))
-            if len(files) >= 2:
-                break
-            _t.sleep(0.5)
-    finally:
-        q.stop()
-    assert len(files) >= 2, files
-    rows = []
-    for f in files:
-        with open(f) as fh:
-            rows += [json.loads(line) for line in fh]
-    # epochs are 10 rows each, all reference-shaped
-    assert len(rows) >= 20
-    assert {r["sensor_id"] for r in rows} <= {"1", "2", "3", "4", "5"}
-    assert all(27 <= r["temperature"] <= 32 for r in rows)
-
-
-def test_record_publish_epoch_replay_clears_stale_files(tmp_path):
-    # ADVICE r5: a replayed epoch that commits FEWER files than a
-    # prior partially-committed attempt must not leave the prior
-    # attempt's higher-index files visible (duplicate records).
-    # Driver-side protocol test: call the writer's commit directly.
-    import os
-
-    from msk_flink_streaming_cdk_spark.sources.pydatasource import (
-        RecordPublishStreamWriter,
-        _PublishCommit,
-    )
-
-    out = str(tmp_path / "pub")
-    staging = os.path.join(out, "_staging")
-    os.makedirs(staging)
-    w = RecordPublishStreamWriter({"path": out})
-
-    def stage(name, payload):
-        p = os.path.join(staging, name)
-        with open(p, "w") as f:
-            f.write(payload)
-        return _PublishCommit(staged=p, n_rows=1)
-
-    # Attempt 1: epoch 3 commits THREE files.
-    msgs = [stage(f"part-a{i}.jsonl", f'{{"r": {i}}}\n') for i in range(3)]
-    w.commit(msgs, 3)
-    assert len(os.listdir(out)) - 1 == 3  # 3 epoch files + _staging
-
-    # Replay of epoch 3 commits only ONE file (fewer partitions after
-    # recovery) — indices 0001/0002 from attempt 1 must be gone.
-    msgs = [stage("part-b0.jsonl", '{"r": 99}\n')]
-    w.commit(msgs, 3)
-    visible = sorted(
-        f for f in os.listdir(out) if f.startswith("epoch-")
-    )
-    assert visible == ["epoch-000003-0000.jsonl"]
-    with open(os.path.join(out, visible[0])) as f:
-        assert f.read() == '{"r": 99}\n'
-
-
-def test_record_publish_commit_clears_orphan_staged_files(tmp_path):
-    # ADVICE r5: staged files from task attempts that crashed before
-    # returning a commit message are never referenced by any message;
-    # commit/abort must clear the whole staging area afterwards.
-    import os
-
-    from msk_flink_streaming_cdk_spark.sources.pydatasource import (
-        RecordPublishWriter,
-        _PublishCommit,
-    )
-
-    out = str(tmp_path / "pub_batch")
-    staging = os.path.join(out, "_staging")
-    os.makedirs(staging)
-    committed = os.path.join(staging, "part-ok.jsonl")
-    with open(committed, "w") as f:
-        f.write('{"r": 1}\n')
-    orphan = os.path.join(staging, "part-crashed-attempt.jsonl")
-    with open(orphan, "w") as f:
-        f.write('{"r": 2}\n')
-
-    w = RecordPublishWriter({"path": out})
-    w.commit([_PublishCommit(staged=committed, n_rows=1)])
-    assert os.path.exists(os.path.join(out, "part-ok.jsonl"))
-    assert not os.path.exists(orphan)
-    assert os.listdir(staging) == []

@@ -147,6 +147,8 @@ def test_upsert_partition_overwrite_touches_only_updated(spark, tmp_path):
 
     before_d1 = files_with_mtime("d1")
     before_d3 = files_with_mtime("d3")
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key)
     updates = spark.createDataFrame(
         [("d2", i, i * 100) for i in range(3)],
         "day string, k long, v long",
@@ -165,8 +167,5 @@ def test_upsert_partition_overwrite_touches_only_updated(spark, tmp_path):
     # idempotence
     upsert_partition_overwrite(updates, path, ["day"])
     assert spark.read.parquet(path).filter("day = 'd2'").count() == 3
-    # conf restored to the session default
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        == "static"
-    )
+    # the session conf is left exactly as it was before the call
+    assert spark.conf.get(mode_key) == mode_before
