@@ -40,6 +40,13 @@ file, as before. On a 4-core VM the ``perfbench``
 ``sensor_backlog`` drain (3 files) went from 8 micro-batches to 4 and
 from 46.6k to 73.3k events/s (median of 10 pairs).
 
+Both queries start through ``streaming/sinks.py::start``, which writes
+a local checkpoint (offset log, commit log, source log, state stores)
+through Hadoop's ``FileSystem`` API instead of ``FileContext``, whose
+local-filesystem path forks ``readlink`` and ``chmod`` shell processes
+for every log file. On the same VM ``sensor_backlog`` went from 99.9k
+to 120.4k events/s (median of 10 pairs, 9 won).
+
 Run locally (file mode):
     python -m msk_flink_streaming_cdk_spark.jobs \
         --properties props.json --source-dir in/ --mode file
@@ -58,7 +65,7 @@ from .schemas import SENSOR_READING
 from .session import get_spark
 from .sources.files import stream_parquet_dir
 from .sources.kafka import read_kafka_json, sink_options, to_kafka_json
-from .streaming.sinks import start, write_partitioned_files
+from .streaming.sinks import session_conf, start, write_partitioned_files
 
 REFERENCE_WATERMARK = "5 seconds"  # main.py:18
 STATEFUL_QUERIES = 2  # Q1 and Q2 run at once and share the cores
@@ -142,11 +149,9 @@ def run_reference_job(
             "path", os.path.join(cfg.output_topic, "")
         )
 
-    conf = spark.conf
-    key = "spark.sql.shuffle.partitions"
-    caller = conf.get(key, None)
-    conf.set(key, str(state_partitions(spark)))
-    try:
+    with session_conf(
+        spark, {"spark.sql.shuffle.partitions": str(state_partitions(spark))}
+    ):
         return [
             start(
                 q1_writer.outputMode("append"),
@@ -160,11 +165,6 @@ def run_reference_job(
                 trigger=trigger,
             ),
         ]
-    finally:
-        if caller is None:
-            conf.unset(key)
-        else:
-            conf.set(key, caller)
 
 
 def main() -> None:

@@ -15,11 +15,52 @@ Every checkpointed streaming query in the package starts through
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+# The manager ``start`` gives a query whose checkpoint is on the local
+# filesystem (see ``start``).
+LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+@contextmanager
+def session_conf(spark: SparkSession, settings: dict[str, str]) -> Iterator[None]:
+    """Set ``settings`` on the session conf for the span of the block,
+    then give each key back the caller's value, or unset it if the
+    caller had none. A query started inside the block keeps the
+    settings: Spark clones the session conf when it builds the query."""
+    conf = spark.conf
+    callers = {key: conf.get(key, None) for key in settings}
+    for key, value in settings.items():
+        conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, caller in callers.items():
+            if caller is None:
+                conf.unset(key)
+            else:
+                conf.set(key, caller)
+
+
+def checkpoint_conf(spark: SparkSession, checkpoint: str) -> dict[str, str]:
+    """The session conf ``start`` sets for a query on ``checkpoint``:
+    ``LOCAL_CHECKPOINT_MANAGER`` when the checkpoint's filesystem is the
+    local one, nothing on any other scheme."""
+    fs = spark._jvm.org.apache.hadoop.fs.Path(checkpoint).getFileSystem(
+        spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    if fs.getScheme() != "file":
+        return {}
+    return {CHECKPOINT_MANAGER_KEY: LOCAL_CHECKPOINT_MANAGER}
 
 
 def start(
@@ -27,12 +68,32 @@ def start(
 ):
     """Start ``writer`` on its ``checkpoint`` dir (returns the
     StreamingQuery); with no ``trigger`` the query drains what has
-    landed, then stops."""
-    return (
-        writer.option("checkpointLocation", checkpoint)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    landed, then stops.
+
+    A checkpoint on the local filesystem (scheme ``file``) is written
+    through ``LOCAL_CHECKPOINT_MANAGER``, Hadoop's ``FileSystem`` API;
+    the query's offset log, commit log, source log and state stores
+    keep it for the query's life. Spark's default manager goes through
+    ``FileContext``, which on ``file:`` forks a ``readlink`` or
+    ``chmod`` shell process for each link lookup and permission set
+    when no native Hadoop library is loaded. On a 4-core VM with Spark
+    4.1.2 each atomic log-file write forked about 20 processes and took
+    80 ms, against 4 and 12-22 ms for a plain ``FileSystem.create``.
+    On ``file:`` both managers give the same no-overwrite guarantee,
+    since FileContext's rename there is also check-then-rename
+    (``getFileLinkStatus(dst)``, then ``File.renameTo``). Every other
+    scheme (hdfs, s3a, abfs) keeps Spark's default manager, whose
+    rename is atomic on HDFS-like stores. Both managers write the same
+    files, so a checkpoint that the default manager wrote resumes under
+    this one.
+    """
+    spark = writer._spark
+    with session_conf(spark, checkpoint_conf(spark, checkpoint)):
+        return (
+            writer.option("checkpointLocation", checkpoint)
+            .trigger(**(trigger or {"availableNow": True}))
+            .start()
+        )
 
 
 PARTITION_COLS = ("year", "month", "day", "hour")

@@ -28,3 +28,13 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_medium():
     return SF_MEDIUM
+
+
+@pytest.fixture(scope="session")
+def built_queries(spark, sf_small):
+    """Every registered query built once at sf0.001. Building the
+    whole registry is most of the cost of the lints that read it, so
+    they share one build."""
+    from msk_flink_streaming_cdk_spark.registry import QUERIES
+
+    return {name: fn(spark, sf_small) for name, fn in QUERIES.items()}

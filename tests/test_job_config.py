@@ -18,6 +18,7 @@ from msk_flink_streaming_cdk_spark.config import (
 )
 from msk_flink_streaming_cdk_spark import jobs
 from msk_flink_streaming_cdk_spark.jobs import run_reference_job
+from msk_flink_streaming_cdk_spark.streaming import sinks
 from msk_flink_streaming_cdk_spark.schemas import SENSOR_READING
 
 T0 = datetime(2024, 1, 1)
@@ -176,6 +177,49 @@ def test_reference_job_restart_keeps_checkpointed_state_partitions(spark, tmp_pa
     monkeypatch.setattr(jobs, "state_partitions", lambda spark: 5)
     _write_source(spark, tmp_path, src, batches[2:], first=2)
     assert _state_partitions(_run_job(spark, cfg, src, ckpt)) == [3, 3]
+    assert _job_outputs(spark, cfg) == one_shot
+
+
+def _checkpoint_managers(queries):
+    return [
+        q._jsq.streamingQuery().offsetLog().fileManager().getClass().getSimpleName()
+        for q in queries
+    ]
+
+
+def test_reference_job_resumes_checkpoint_across_the_manager_switch(spark, tmp_path, monkeypatch):
+    # Checkpoints that Spark's default FileContext-based manager wrote
+    # resume under the FileSystem-based one that local checkpoints now
+    # get: the restarted job's output equals a one-shot run.
+    batches = _sensor_batches(4)
+    one_src = os.path.join(str(tmp_path), "one_src")
+    _write_source(spark, tmp_path, one_src, batches)
+    one_cfg = load_job_config(
+        _props_file(tmp_path, str(tmp_path / "one_alerts"), str(tmp_path / "one_bucket"))
+    )
+    _run_job(spark, one_cfg, one_src, os.path.join(str(tmp_path), "one_ckpt"))
+    one_shot = _job_outputs(spark, one_cfg)
+    assert one_shot[0] and one_shot[1]
+
+    src = os.path.join(str(tmp_path), "src")
+    cfg = load_job_config(
+        _props_file(tmp_path, str(tmp_path / "alerts"), str(tmp_path / "bucket"))
+    )
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    with monkeypatch.context() as m:
+        m.setattr(
+            sinks,
+            "LOCAL_CHECKPOINT_MANAGER",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileContextBasedCheckpointFileManager",
+        )
+        _write_source(spark, tmp_path, src, batches[:2])
+        queries = _run_job(spark, cfg, src, ckpt)
+    assert _checkpoint_managers(queries) == ["FileContextBasedCheckpointFileManager"] * 2
+
+    _write_source(spark, tmp_path, src, batches[2:], first=2)
+    queries = _run_job(spark, cfg, src, ckpt)
+    assert _checkpoint_managers(queries) == ["FileSystemBasedCheckpointFileManager"] * 2
     assert _job_outputs(spark, cfg) == one_shot
 
 

@@ -449,7 +449,7 @@ _BOUNDED_GLOBAL_WINDOW_OK = {
 }
 
 
-def test_no_unpartitioned_window_over_unbounded_input(spark, sf_small):
+def test_no_unpartitioned_window_over_unbounded_input(built_queries):
     # The round-7 verdict's global-window class (text_pmi_pairs
     # row_number-over-vocabulary, text_pack_sequences global cumsum,
     # customer_rfm_segments ntile x3, orders_abc_pareto_classes
@@ -463,10 +463,10 @@ def test_no_unpartitioned_window_over_unbounded_input(spark, sf_small):
     )
 
     offenders = {}
-    for name, fn in QUERIES.items():
+    for name, df in built_queries.items():
         if name in _BOUNDED_GLOBAL_WINDOW_OK:
             continue
-        nodes = unpartitioned_window_nodes(fn(spark, sf_small))
+        nodes = unpartitioned_window_nodes(df)
         if nodes:
             offenders[name] = nodes
     assert not offenders, (

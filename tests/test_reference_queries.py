@@ -22,14 +22,6 @@ def test_query_matches_oracle_sf0001(spark, sf_small, name):
     compare(QUERIES[name](spark, sf_small), ORACLES[name], sf_small)
 
 
-@pytest.fixture(scope="module")
-def built_queries(spark, sf_small):
-    """Every registered query built once at sf0.001. Building the
-    whole registry is most of the cost of the two lints that read it,
-    so they share one build."""
-    return {name: fn(spark, sf_small) for name, fn in QUERIES.items()}
-
-
 def test_no_oracle_returns_hugeint(sf_small):
     """Lint: no oracle may type a column HUGEINT (DuckDB int128).
 

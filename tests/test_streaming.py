@@ -26,8 +26,12 @@ from msk_flink_streaming_cdk_spark.operators.reference import (
 from msk_flink_streaming_cdk_spark.schemas import SENSOR_READING
 from msk_flink_streaming_cdk_spark.sources.files import stream_parquet_dir
 from msk_flink_streaming_cdk_spark.streaming.sinks import (
+    CHECKPOINT_MANAGER_KEY,
+    LOCAL_CHECKPOINT_MANAGER,
+    checkpoint_conf,
     foreach_batch_publisher,
     memory_sink,
+    start,
     write_partitioned_files,
 )
 
@@ -244,6 +248,46 @@ def test_partitioned_file_sink_marks_exactly_the_touched_hours(spark, tmp_path):
     }
     assert _hour_dirs(out_dir, "_SUCCESS") == hours
     assert _hour_dirs(out_dir, "part-*") == hours
+
+
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+@pytest.mark.parametrize("caller", [None, FILE_CONTEXT_MANAGER])
+def test_start_writes_local_checkpoint_logs_through_filesystem_api(
+    spark, tmp_path, caller
+):
+    # A checkpoint on the local filesystem gets the FileSystem-based
+    # manager for its offset and commit logs, whatever the caller's
+    # session holds, and the caller's value of the key is left as it was.
+    src = _write_batches(spark, tmp_path, [[("1", 31, 0)]])
+    readings = stream_parquet_dir(spark, src, SENSOR_READING)
+    if caller is not None:
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, caller)
+    try:
+        q = start(
+            readings.writeStream.format("noop"), str(tmp_path / "ckpt")
+        )
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY, None) == caller
+    finally:
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
+    assert q.awaitTermination(120)
+    sq = q._jsq.streamingQuery()
+    for log in (sq.offsetLog(), sq.commitLog()):
+        name = log.fileManager().getClass().getName()
+        assert name.endswith("FileSystemBasedCheckpointFileManager"), name
+
+
+def test_checkpoint_conf_leaves_other_schemes_to_spark_default(spark, tmp_path):
+    # Only the local filesystem gets the switch; an HDFS checkpoint (the
+    # client is built, nothing is contacted) keeps Spark's default.
+    local = {CHECKPOINT_MANAGER_KEY: LOCAL_CHECKPOINT_MANAGER}
+    assert checkpoint_conf(spark, str(tmp_path / "ckpt")) == local
+    assert checkpoint_conf(spark, (tmp_path / "ckpt").as_uri()) == local
+    assert checkpoint_conf(spark, "hdfs://localhost:1/ckpt") == {}
 
 
 def test_upsert_latest_sink_merges_and_is_idempotent(spark, tmp_path):
